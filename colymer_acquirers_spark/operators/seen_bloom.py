@@ -22,8 +22,14 @@ Sizing (10^10-URL frontier): 10 bits/key ≈ 12.5 GB total ⇒ ~200 shards of
 analog of block compaction, ``acquirer.py:46-58``). ``BloomSeen.sized``
 derives (n_shards, m_bits, k) from expected item count + target FPR using
 exactly that arithmetic; the crawl loop re-sizes at compaction when the
-accumulated occupancy pushes the estimated FPR past its threshold
+accumulated occupancy pushes the estimated FPR past 2× ``TARGET_FPR``
 (rebuilding from the exact seen set, which compaction has in hand anyway).
+
+Eviction (``plans.crawl.evict_seen``) never touches the shards: a bloom
+cannot delete, and it does not need to. An evicted URL keeps probing
+maybe-seen, so it goes to the exact anti-join backstop, which no longer
+holds it and lets it through. A stale positive costs one exact lookup,
+never a result.
 """
 
 from __future__ import annotations
@@ -54,6 +60,7 @@ BLOOM_SCHEMA = T.StructType(
 DEFAULT_M_BITS = 1 << 20  # 128 KiB per shard (test scale)
 DEFAULT_K = 5
 DEFAULT_SHARDS = 32
+TARGET_FPR = 0.01  # sizing target; the crawl loop re-sizes past 2× this
 
 
 def _with_hashes(df: DataFrame, n_shards: int) -> DataFrame:
@@ -89,7 +96,7 @@ class BloomSeen:
     def sized(
         cls,
         expected_items: int,
-        target_fpr: float = 0.01,
+        target_fpr: float = TARGET_FPR,
         max_shard_bytes: int = 1 << 26,
     ) -> "BloomSeen":
         """Derive (n_shards, m_bits, k) from expected item count and target
@@ -188,34 +195,28 @@ class BloomSeen:
         """
         m_bits, k = self.m_bits, self.k
         fr = _with_hashes(frontier, self.n_shards)
-        cols = [f.name for f in fr.schema.fields]
+        keep = [f.name for f in fr.schema.fields if not f.name.startswith("__")]
         out_schema = T.StructType(
-            [f for f in fr.schema.fields if not f.name.startswith("__")]
+            [fr.schema[c] for c in keep]
             + [T.StructField("maybe_seen", T.BooleanType(), False)]
         )
-        keep = [c for c in cols if not c.startswith("__")]
 
-        def check(key, fdf_iter_or_df, bdf=None):  # cogroup signature (left, right)
-            fdf, bdf = fdf_iter_or_df, bdf
+        def check(fdf: pd.DataFrame, bdf: pd.DataFrame) -> pd.DataFrame:
             if len(fdf) == 0:
                 return pd.DataFrame(columns=keep + ["maybe_seen"])
-            if bdf is None or len(bdf) == 0:
-                out = fdf[keep].copy()
+            out = fdf[keep].copy()
+            if len(bdf) == 0:
                 out["maybe_seen"] = False
                 return out
             arrs = [np.frombuffer(b, dtype=np.uint8) for b in bdf["bloom"]]
             arr = np.bitwise_or.reduce(arrs) if len(arrs) > 1 else arrs[0]
             pos = _positions(fdf["__h1"].to_numpy(), fdf["__h2"].to_numpy(), k, m_bits)
             bits = (arr[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-            out = fdf[keep].copy()
             out["maybe_seen"] = bits.all(axis=1)
             return out
-
-        def cogroup_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            return check(None, left, right)
 
         return (
             fr.groupby("__shard")
             .cogroup(blooms.groupby("shard"))
-            .applyInPandas(cogroup_fn, out_schema)
+            .applyInPandas(check, out_schema)
         )

@@ -22,8 +22,7 @@ from pyspark.sql import functions as F
 
 from colymer_acquirers_spark import schemas
 from colymer_acquirers_spark.operators.seen import compact_seen
-from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
-from colymer_acquirers_spark.operators.seen_cuckoo import CuckooSeen
+from colymer_acquirers_spark.operators.seen_bloom import TARGET_FPR, BloomSeen
 from colymer_acquirers_spark.plans.round import (
     _trace,
     bootstrap_frontier,
@@ -78,28 +77,6 @@ def _warm_parse_exprs(spark: SparkSession) -> None:
     except Exception:
         pass
 
-
-def _recover_bloom_swap(path: str) -> None:
-    """Finish an interrupted marker-less parquet-dir swap (the cuckoo/bloom
-    shard dir under ``rounds/K/bloom``). ``_SUCCESS`` is the commit marker:
-    roll forward to a fully-written ``.__evict`` sibling, else roll back to
-    ``.__old``, then drop leftovers. A dropped healthy ``.__evict`` (crash
-    before the first rename) only loses a prefilter cleanup — the exact
-    anti-join backstop keeps results identical."""
-
-    def ok(d: str) -> bool:
-        return os.path.exists(os.path.join(d, "_SUCCESS"))
-
-    tmp, old = path + ".__evict", path + ".__old"
-    if not ok(path):
-        src = tmp if ok(tmp) else old if ok(old) else None
-        if src is not None:
-            if os.path.exists(path):
-                shutil.rmtree(path)
-            os.rename(src, path)
-    if ok(path):
-        for d in (tmp, old):
-            shutil.rmtree(d, ignore_errors=True)
 
 OUTPUTS = [
     "crawl_order",
@@ -282,12 +259,7 @@ def read_seen(
     return base if delta is None else base.unionByName(delta)
 
 
-def evict_seen(
-    spark: SparkSession,
-    workdir: str,
-    urls: DataFrame,
-    clean_prefilter: bool = True,
-) -> int:
+def evict_seen(spark: SparkSession, workdir: str, urls: DataFrame) -> int:
     """Remove urls from the seen state so a later run RE-FETCHES them —
     the re-crawl primitive (reference analog: a platform item is
     re-acquired when edited; the article's ``version``/edit_count field
@@ -295,16 +267,14 @@ def evict_seen(
     stored row).
 
     Stamped with the last committed round: only fetches at rounds ≤ stamp
-    are forgotten, so the re-fetch itself stays seen afterwards. With a
-    cuckoo prefilter the shard fingerprints are deleted too (the operation
-    a bloom cannot do); with a bloom the stale positive just routes those
-    urls through the exact backstop, which now correctly misses. Pair with
+    are forgotten, so the re-fetch itself stays seen afterwards. The bloom
+    prefilter is left as it is: its stale positive routes those urls
+    through the exact backstop, which now correctly misses. Pair with
     ``run_crawl(..., reseed=urls)`` so the urls re-enter the frontier.
 
     Returns the eviction stamp (as_of round).
     """
     from colymer_acquirers_spark.functions.canonical import canonicalize_url
-    from colymer_acquirers_spark.operators.seen_cuckoo import CuckooSeen
 
     done = committed_rounds(workdir)
     as_of = done[-1] if done else 0
@@ -313,36 +283,6 @@ def evict_seen(
         if "canonical_url" not in urls.columns
         else urls.select("canonical_url")
     ).filter(F.col("canonical_url").isNotNull()).dropDuplicates(["canonical_url"])
-    # Restrict the PREFILTER delete set before committing the new eviction
-    # table: a cuckoo delete of an entry not currently in the filter can
-    # strip a colliding fingerprint of a genuinely-seen url (the module's
-    # documented caveat), which would bypass the exact backstop and break
-    # the "prefilter never changes results" invariant. Semi-joining the
-    # incoming urls against the exact seen state (as READ at this instant —
-    # i.e. already minus prior evictions, including a prior write at this
-    # same stamp) keeps delete_urls to urls that are actually inserted,
-    # exactly once, no matter how often evict_seen is re-invoked.
-    delete_set = None
-    if clean_prefilter and done:
-        exact = read_seen(spark, workdir, as_of)
-        if exact is not None:
-            # lineage TRUNCATION is load-bearing here, not an optimization:
-            # the frame snapshots state derived from files the staged swap
-            # below is about to rewrite — a recomputable plan could re-read
-            # the rewritten dir. flat_checkpoint upgrades to a reliable
-            # checkpoint when a checkpoint dir is configured (cluster mode).
-            from colymer_acquirers_spark.operators.ckpt import flat_checkpoint
-
-            delete_set = flat_checkpoint(
-                canon.join(
-                    exact.select("canonical_url").dropDuplicates(
-                        ["canonical_url"]
-                    ),
-                    on="canonical_url",
-                    how="left_semi",
-                ),
-                eager=True,
-            )
     path = os.path.join(workdir, "evictions", str(as_of))
     if os.path.exists(os.path.join(path, "_TABLE_COMMIT")):
         # staged swap, NOT an in-place overwrite: a crash mid-rewrite must
@@ -358,26 +298,6 @@ def evict_seen(
         _replace_committed(merged, path)
     else:
         write_table(canon, path, mode="overwrite")
-
-    if delete_set is not None:
-        bloom_path = os.path.join(_round_dir(workdir, done[-1]), "bloom")
-        _recover_bloom_swap(bloom_path)
-        if os.path.exists(bloom_path):
-            peek = spark.read.parquet(bloom_path)
-            cs = CuckooSeen.from_table(peek) if "table" in peek.columns else None
-            if cs is not None:  # cuckoo: supports deletion
-                updated = cs.delete_urls(
-                    spark.read.schema(cs.SCHEMA).parquet(bloom_path), delete_set
-                )
-                tmp = bloom_path + ".__evict"
-                old = bloom_path + ".__old"
-                updated.write.mode("overwrite").parquet(tmp)
-                # two cheap renames instead of rmtree-then-rename: every
-                # crash point leaves a recoverable state for
-                # _recover_bloom_swap (roll forward to tmp / back to old)
-                os.rename(bloom_path, old)
-                os.rename(tmp, bloom_path)
-                shutil.rmtree(old)
     return as_of
 
 
@@ -411,6 +331,18 @@ def read_pinned(spark: SparkSession, workdir: str, upto: int) -> DataFrame | Non
     return base if delta is None else base.unionByName(delta)
 
 
+def _read_bloom(spark: SparkSession, workdir: str, k: int) -> DataFrame | None:
+    """Round ``k``'s committed bloom shard table, or None when it is absent
+    or uncommitted (the caller then rebuilds it from the full seen state)."""
+    try:
+        return read_table(
+            spark, os.path.join(_round_dir(workdir, k), "bloom"),
+            schema=BloomSeen.SCHEMA,
+        )
+    except FileNotFoundError:
+        return None
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -428,8 +360,6 @@ def run_crawl(
     initial_seen: DataFrame | None = None,
     metrics_full: bool = True,
     compact_every: int = 8,
-    bloom_target_fpr: float = 0.01,
-    bloom_autosize: bool = True,
     reseed: DataFrame | None = None,
 ) -> dict:
     """Run (or resume) up to ``max_rounds`` crawl rounds; returns summary.
@@ -439,15 +369,18 @@ def run_crawl(
     (the bloom is a prefilter with an exact backstop — never changes
     results, only the amount of exact anti-join work).
 
+    Each round writes its accumulated bloom as a committed table under
+    ``rounds/K/bloom``. A bloom that is missing or uncommitted on resume
+    is rebuilt from the full seen state (the safe direction — a
+    half-written bloom could false-drop URLs).
+
     Bloom auto-sizing: when the accumulated seen count pushes the filter's
-    estimated FPR past 2× ``bloom_target_fpr``, the next compaction
-    rebuilds the bloom RIGHT-SIZED (BloomSeen.sized, 4× headroom) from the
-    exact seen set it is compacting anyway — without this, fixed shards
-    silently saturate (FPR→1) and every probe falls through to the exact
-    anti-join backstop. Rebuild lands in a temp dir and renames over the
-    old bloom; a crash between the two leaves NO bloom for that round,
-    which resume handles by rebuilding from the full seen state (the safe
-    direction — a half-written bloom could false-drop URLs).
+    estimated FPR past 2× ``TARGET_FPR``, the next compaction rebuilds the
+    bloom RIGHT-SIZED (BloomSeen.sized, 4× headroom) from the exact seen
+    set it is compacting anyway — without this, fixed shards silently
+    saturate (FPR→1) and every probe falls through to the exact anti-join
+    backstop. The rebuild replaces the round's bloom through the staged
+    swap every state table uses (``tables._replace_committed``).
     """
     if use_bloom and bloom_filter is None:
         bloom_filter = BloomSeen()
@@ -477,17 +410,7 @@ def run_crawl(
         n_seen_base = seen_base.count()
     # canonicalize once, reuse across rounds (at warehouse scale the pages
     # table stores canonical_url as a bucketed column instead — see README).
-    # r8 NOTE (negative result, kept for the record): a parse-once page
-    # store (parsed_pages + plan-truncating lazy checkpoint, so rounds
-    # join pre-parsed (p, env) structs) was built and A/B-measured here —
-    # warm crawl wall REGRESSED (14.3-14.4 s → 21-24 s in 2 of 3
-    # alternating fresh-process pairs): the full-corpus parse+cache
-    # materialization serializes behind round 0's first job instead of
-    # riding the per-round write pool, and parses the ~30% of pages the
-    # budget never fetches. The per-round construct gap it targeted
-    # turned out to be driver-JVM contention while pooled writes run, not
-    # parse-tree analysis. Reverted to the per-round parse (run_round
-    # step 7), which keeps parse work proportional to FETCHED pages.
+    # A parse-once page store was measured slower: OPTIMIZATION_r08.md.
     pages_k = keyed_pages(pages).persist()
     # compile the robots rules table once (one array<struct> row per host);
     # every round broadcast-joins the same compiled frame instead of
@@ -547,21 +470,12 @@ def run_crawl(
 
     all_metrics = [read_manifest(workdir, k)["metrics"] for k in done]
 
-    # resume must probe with the kind and geometry the persisted shard
-    # bytes were built with (the filter may be a bloom OR a cuckoo, and a
-    # bloom may have been auto-resized since the run began) — dispatch on
-    # the persisted table's own columns
+    # resume must probe with the geometry the persisted shard bytes were
+    # built with (the bloom may have been auto-resized since the run began)
     if use_bloom and done:
-        last_bloom = os.path.join(_round_dir(workdir, done[-1]), "bloom")
-        _recover_bloom_swap(last_bloom)  # a crashed evict's half-done swap
-        if os.path.exists(last_bloom):
-            peek = spark.read.parquet(last_bloom)
-            kind = CuckooSeen if "table" in peek.columns else BloomSeen
-            persisted = kind.from_table(
-                spark.read.schema(kind.SCHEMA).parquet(last_bloom)
-            )
-            if persisted is not None:
-                bloom_filter = persisted
+        last_bloom = _read_bloom(spark, workdir, done[-1])
+        if last_bloom is not None:
+            bloom_filter = BloomSeen.from_table(last_bloom) or bloom_filter
 
     for rnd in range(start_round, max_rounds):
         if frontier_count == 0:
@@ -570,11 +484,7 @@ def run_crawl(
             read_seen(spark, workdir, rnd - 1, seen_base) if rnd > 0 else seen_base
         )
         pinned_prior = read_pinned(spark, workdir, rnd - 1) if rnd > 0 else None
-        bloom = None
-        if use_bloom and rnd > 0:
-            bloom_path = os.path.join(_round_dir(workdir, rnd - 1), "bloom")
-            if os.path.exists(bloom_path):
-                bloom = spark.read.schema(bloom_filter.SCHEMA).parquet(bloom_path)
+        bloom = _read_bloom(spark, workdir, rnd - 1) if use_bloom and rnd > 0 else None
         rd = _round_dir(workdir, rnd)
         # clean any uncommitted leftovers from a crashed attempt
         if os.path.isdir(rd) and not os.path.exists(_manifest_path(workdir, rnd)):
@@ -604,8 +514,9 @@ def run_crawl(
             # or those URLs would wrongly probe "definitely unseen"
             delta_src = rr.seen_delta
             if bloom is None and rnd > 0 and seen is not None:
-                # no prior bloom at rnd>0 (resuming a workdir originally
-                # crawled with use_bloom=False): rebuild the accumulator
+                # no committed prior bloom at rnd>0 (resuming a workdir
+                # crawled with use_bloom=False, or whose last bloom was
+                # lost or never committed): rebuild the accumulator
                 # from the FULL seen state, not just this round's delta —
                 # otherwise the next round's probe reports earlier-seen
                 # URLs "definitely unseen" and the never-false-drop
@@ -615,7 +526,7 @@ def run_crawl(
                 delta_src = delta_src.unionByName(seen_base.select("canonical_url"))
             delta = bloom_filter.build_delta(delta_src)
             acc = delta if bloom is None else bloom_filter.merge(bloom.unionByName(delta))
-            acc.write.mode("overwrite").parquet(os.path.join(rd, "bloom"))
+            write_table(acc, os.path.join(rd, "bloom"), mode="overwrite")
         import time as _time
 
         _tb = _time.monotonic()
@@ -654,27 +565,15 @@ def run_crawl(
                     mode="overwrite",
                 )
             # bloom re-size at compaction (occupancy check is pure driver
-            # arithmetic: accumulated inserts = rank_offset + initial seen).
-            # Bloom-only: a cuckoo filter's stash absorbs overload exactly,
-            # so it degrades in speed, not correctness
-            if (
-                use_bloom
-                and bloom_autosize
-                and isinstance(bloom_filter, BloomSeen)
-                and full is not None
-            ):
+            # arithmetic: accumulated inserts = rank_offset + initial seen)
+            if use_bloom and full is not None:
                 n_inserted = rank_offset + n_seen_base
-                if bloom_filter.estimated_fpr(n_inserted) > 2 * bloom_target_fpr:
-                    bloom_filter = BloomSeen.sized(
-                        max(4 * n_inserted, 1024), target_fpr=bloom_target_fpr
+                if bloom_filter.estimated_fpr(n_inserted) > 2 * TARGET_FPR:
+                    bloom_filter = BloomSeen.sized(max(4 * n_inserted, 1024))
+                    _replace_committed(
+                        bloom_filter.build_delta(full.select("canonical_url")),
+                        os.path.join(rd, "bloom"),
                     )
-                    bloom_out = os.path.join(rd, "bloom")
-                    tmp_out = bloom_out + ".__resized"
-                    bloom_filter.build_delta(
-                        full.select("canonical_url")
-                    ).write.mode("overwrite").parquet(tmp_out)
-                    shutil.rmtree(bloom_out, ignore_errors=True)
-                    os.rename(tmp_out, bloom_out)
 
     pages_k.unpersist()
     return {

@@ -220,20 +220,7 @@ def run_round(
     metrics_full=False skips the metrics-only jobs (candidate/robots/new-url
     counts become -1); results are unchanged.
 
-    r8 NOTE (negative result, kept for the record): a cross-round overlap
-    (VERDICT r7 #2 — return once crawl_order/attachments_new/frontier_next
-    are durable so round K+1's plan construction hides under the
-    articles/lineage drain, manifest commits deferred in round order) was
-    built and A/B-measured here: warm-crawl wall NEUTRAL in all pairs at
-    BOTH local[32] (+0.4/+0.6/+2.4%) and local[8], and the event-log gap
-    audit unchanged (2.2 s driver-only either way). The reason is
-    structural: frontier_next transitively contains the round's dominant
-    compute (parse → link expansion → merge), so it is both the
-    dependency of round K+1 AND the round's last-finishing job — there is
-    no tail left to hide construction under. Reverted; what stayed is the
-    persist-analysis offload and dependency-first submission order below,
-    which cut the measured main-thread construction phase from ~1.2 s to
-    ~0.5 s per round.
+    A cross-round overlap was measured neutral: OPTIMIZATION_r08.md.
     """
     _t = time.monotonic()
     C = _round_cols(parse_impl)

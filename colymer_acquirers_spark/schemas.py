@@ -53,15 +53,6 @@ SEEN = T.StructType(
     ]
 )
 
-# -- seen set, bloom tier: salted-hash shards (north_rule) -------------------
-SEEN_BLOOM = T.StructType(
-    [
-        T.StructField("shard", T.IntegerType(), False),
-        T.StructField("bloom", T.BinaryType(), False),
-        T.StructField("n_items", T.LongType(), False),
-    ]
-)
-
 # -- politeness (reference analog: request_interval, scan.py:98-107;
 #    mechanism colymer/sites/site.py:30-41) ----------------------------------
 POLITENESS = T.StructType(

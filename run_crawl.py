@@ -44,10 +44,6 @@ def main() -> int:
     ap.add_argument("--use-bloom", action="store_true",
                     help="prefilter the seen-set anti-join with a "
                          "probabilistic shard tier")
-    ap.add_argument("--seen-filter", choices=["bloom", "cuckoo"],
-                    default="bloom",
-                    help="prefilter kind for --use-bloom (cuckoo supports "
-                         "deletion for re-crawl eviction)")
     ap.add_argument("--parse-impl", choices=["jvm", "arrow"], default="jvm")
     ap.add_argument("--fast-metrics", action="store_true",
                     help="skip metrics-only count jobs")
@@ -80,12 +76,6 @@ def main() -> int:
         politeness = spark.read.parquet(args.politeness) if args.politeness else None
         robots = spark.read.parquet(args.robots) if args.robots else None
 
-    seen_filter = None
-    if args.use_bloom and args.seen_filter == "cuckoo":
-        from colymer_acquirers_spark.operators.seen_cuckoo import CuckooSeen
-
-        seen_filter = CuckooSeen()
-
     if args.round_seconds and politeness is not None:
         from colymer_acquirers_spark.operators.politeness import (
             budget_from_delay,
@@ -107,7 +97,7 @@ def main() -> int:
         spark, pages, seeds, politeness, robots, args.workdir,
         max_rounds=args.rounds, default_budget=args.default_budget,
         resume=not args.fresh, boundary_mode=args.boundary_mode,
-        use_bloom=args.use_bloom, bloom_filter=seen_filter,
+        use_bloom=args.use_bloom,
         parse_impl=args.parse_impl,
         metrics_full=not args.fast_metrics,
         compact_every=args.compact_every,

@@ -152,3 +152,46 @@ def test_crawl_autosize_resizes_and_stays_exact(spark, tmp_path):
     b6 = read_output(spark, wd_b, "crawl_order").orderBy("rank").collect()
     assert [r["url"] for r in a6] == [r["url"] for r in b6]
     pages.unpersist()
+
+
+def test_crawl_resumes_over_emptied_bloom_dir(spark, tmp_path):
+    """A committed round whose bloom dir lost its files and commit marker
+    (what an interrupted delete leaves) must resume: the uncommitted dir
+    counts as absent, the next round rebuilds the bloom from the full seen
+    state, and the crawl order equals the exact-only run's."""
+    import os
+
+    from colymer_acquirers_spark.plans.crawl import read_output, run_crawl
+    from colymer_acquirers_spark.sources.synth import (
+        synth_pages,
+        synth_politeness,
+        synth_seeds,
+    )
+
+    pages = synth_pages(spark, 300).persist()
+    seeds = synth_seeds(spark, 6)
+    pol = synth_politeness(spark)
+
+    def crawl(wd, **kw):
+        run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=3, **kw)
+        url = read_output(spark, wd, "crawl_order").orderBy("rank").first()["url"]
+        if kw:
+            bloom_dir = os.path.join(wd, "rounds", "2", "bloom")
+            for name in os.listdir(bloom_dir):
+                os.remove(os.path.join(bloom_dir, name))
+        reseed = spark.createDataFrame([(url, 0)], ["url", "priority"])
+        run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=4,
+                  reseed=reseed, **kw)
+        rows = read_output(spark, wd, "crawl_order").orderBy("rank").collect()
+        return [(r["rank"], r["url"], r["round"]) for r in rows]
+
+    wd_b = str(tmp_path / "bloom")
+    got = crawl(wd_b, use_bloom=True)
+    want = crawl(str(tmp_path / "exact"))
+    assert got == want
+    assert {r for _, _, r in got} == {0, 1, 2, 3}
+    for k in (0, 1, 3):  # round 2's is the emptied one
+        assert os.path.exists(
+            os.path.join(wd_b, "rounds", str(k), "bloom", "_TABLE_COMMIT")
+        ), k
+    pages.unpersist()

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from colymer_acquirers_spark.operators.seen_cuckoo import CuckooSeen
 from colymer_acquirers_spark.plans.crawl import evict_seen, read_output, run_crawl
 from colymer_acquirers_spark.sources.synth import (
     synth_pages,
@@ -48,9 +47,11 @@ def test_evict_refetches_exactly_once(spark, tmp_path):
     assert fetch_rounds[1] == 3, fetch_rounds
     assert [r["rank"] for r in rows] == list(range(len(rows)))
 
-    # determinism: replay the whole crawl/evict/reseed sequence → identical
+    # replay the whole crawl/evict/reseed sequence with the bloom prefilter
+    # on → identical: the evicted url's stale bloom positive falls through
+    # to the exact backstop
     rows2, url2 = _run_sequence(
-        spark, str(tmp_path / "wd2"), pages, seeds, pol
+        spark, str(tmp_path / "wd2"), pages, seeds, pol, use_bloom=True
     )
     assert url2 == url
     assert [(r["rank"], r["url"], r["round"]) for r in rows2] == [
@@ -59,32 +60,34 @@ def test_evict_refetches_exactly_once(spark, tmp_path):
     pages.unpersist()
 
 
-def test_evict_with_cuckoo_prefilter_cleans_shards(spark, tmp_path):
-    """Same flow under the delete-capable prefilter: results identical to
-    the exact-only eviction run, and the persisted cuckoo shards actually
-    forget the url (probe flips to definitely-unseen)."""
+def test_evict_with_bloom_prefilter_matches_exact(spark, tmp_path):
+    """The bloom cannot delete: after evict_seen the persisted shards still
+    probe maybe-seen for the url, the exact backstop lets it through, and
+    the results equal the exact-only eviction run."""
     import os
+
+    from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
+    from colymer_acquirers_spark.sources.tables import read_table
 
     pages = synth_pages(spark, 300).persist()
     seeds = synth_seeds(spark, 6)
     pol = synth_politeness(spark)
 
-    wd = str(tmp_path / "cuckoo")
-    kw = dict(use_bloom=True,
-              bloom_filter=CuckooSeen(n_shards=4, n_buckets=1 << 10))
+    wd = str(tmp_path / "bloom")
+    kw = dict(use_bloom=True, bloom_filter=BloomSeen(n_shards=4, m_bits=1 << 14))
     run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=3, **kw)
     url = read_output(spark, wd, "crawl_order").orderBy("rank").first()["url"]
     target = spark.createDataFrame([(url, 0)], ["url", "priority"])
 
-    bloom_path = os.path.join(wd, "rounds", "2", "bloom")
-    cs = CuckooSeen.from_table(spark.read.parquet(bloom_path))
+    bloom = read_table(spark, os.path.join(wd, "rounds", "2", "bloom"),
+                       schema=BloomSeen.SCHEMA)
+    bs = BloomSeen.from_table(bloom)
     probe_df = spark.createDataFrame([(url,)], ["canonical_url"])
-    before = cs.probe(probe_df, spark.read.schema(cs.SCHEMA).parquet(bloom_path))
-    assert before.first()["maybe_seen"] is True
+    assert bs.probe(probe_df, bloom).first()["maybe_seen"] is True
 
     evict_seen(spark, wd, target.select("url"))
-    after = cs.probe(probe_df, spark.read.schema(cs.SCHEMA).parquet(bloom_path))
-    assert after.first()["maybe_seen"] is False  # shards forgot the url
+    # a stale positive: the shards are untouched by the eviction
+    assert bs.probe(probe_df, bloom).first()["maybe_seen"] is True
 
     run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=5,
               reseed=target, use_bloom=True)
@@ -130,27 +133,24 @@ def test_eviction_survives_compaction(spark, tmp_path):
 
 
 def test_evict_never_fetched_and_double_evict_is_safe(spark, tmp_path):
-    """ADVICE r3 (high): the cuckoo delete set must be restricted to urls
-    actually in the exact seen state. Evicting never-fetched urls, or
+    """ADVICE r3 (high), on the bloom path: evicting never-fetched urls, or
     re-invoking evict_seen at the same stamp (prior stamp's urls merged
-    back into the set), must not double-delete and strip a stranger's
-    colliding fingerprint — no url other than the target may ever be
-    fetched twice."""
-    import os
+    back into the set), must not un-see anything else — no url other than
+    the target may ever be fetched twice."""
+    from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
 
     pages = synth_pages(spark, 300).persist()
     seeds = synth_seeds(spark, 6)
     pol = synth_politeness(spark)
     wd = str(tmp_path / "wd")
-    kw = dict(use_bloom=True,
-              bloom_filter=CuckooSeen(n_shards=4, n_buckets=1 << 10))
+    kw = dict(use_bloom=True, bloom_filter=BloomSeen(n_shards=4, m_bits=1 << 14))
     run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=3, **kw)
     url = read_output(spark, wd, "crawl_order").orderBy("rank").first()["url"]
     target = spark.createDataFrame([(url, 0)], ["url", "priority"])
 
     evict_seen(spark, wd, target.select("url"))
-    # second call at the SAME stamp: target again (already deleted from the
-    # shards) plus urls that were never crawled at all
+    # second call at the SAME stamp: target again (already evicted) plus
+    # urls that were never crawled at all
     bogus = spark.createDataFrame(
         [(url,), ("https://never.test/a",), ("https://never.test/b",)],
         ["url"],
@@ -167,41 +167,6 @@ def test_evict_never_fetched_and_double_evict_is_safe(spark, tmp_path):
     assert not dupes, f"stranger urls fetched twice: {dupes}"
     assert [r["rank"] for r in rows] == list(range(len(rows)))
     pages.unpersist()
-
-
-def test_bloom_swap_crash_recovery(spark, tmp_path):
-    """Review r4: the cuckoo-shard swap in evict_seen is two renames with
-    a recovery pass — every simulated crash point must restore a usable
-    shard dir and clean the siblings."""
-    import os
-    import shutil
-
-    from colymer_acquirers_spark.plans.crawl import _recover_bloom_swap
-
-    def mk(path, val):
-        spark.range(val, val + 3).write.mode("overwrite").parquet(path)
-
-    base = str(tmp_path / "bloom")
-    # crash between the renames: only .__evict (new) and .__old exist
-    mk(base + ".__evict", 100)
-    mk(base + ".__old", 0)
-    _recover_bloom_swap(base)
-    assert {r["id"] for r in spark.read.parquet(base).collect()} == {100, 101, 102}
-    assert not os.path.exists(base + ".__evict")
-    assert not os.path.exists(base + ".__old")
-
-    # crash after the second rename: path healthy, stale .__old remains
-    mk(base + ".__old", 0)
-    _recover_bloom_swap(base)
-    assert not os.path.exists(base + ".__old")
-    assert {r["id"] for r in spark.read.parquet(base).collect()} == {100, 101, 102}
-
-    # incomplete .__evict (no _SUCCESS) never wins over a healthy path
-    shutil.rmtree(base)
-    mk(base, 5)
-    os.makedirs(base + ".__evict")
-    _recover_bloom_swap(base)
-    assert {r["id"] for r in spark.read.parquet(base).collect()} == {5, 6, 7}
 
 
 def test_double_evict_rewrite_is_staged(spark, tmp_path, monkeypatch):

@@ -169,7 +169,6 @@ def test_flagship_cache_key_covers_crawl_semantic_modules():
         "sources/tables.py", "schemas.py",
         "operators/politeness.py", "operators/ranking.py",
         "operators/seen.py", "operators/seen_bloom.py",
-        "operators/seen_cuckoo.py", "operators/ckpt.py",
         "functions/canonical.py", "functions/parse.py",
         "functions/parse_expr.py", "functions/envelope.py",
         "functions/envelope_expr.py",
