@@ -69,17 +69,21 @@ def main():
     results = []
     for bands, rows_per_band in [(8, 4), (16, 2)]:
         t0 = time.monotonic()
+        cached: list = []
         cand = minhash_lsh_pairs(
-            docs, "doc_id", "text", n_hashes=32, bands=bands
+            docs, "doc_id", "text", n_hashes=32, bands=bands, persisted=cached
         )
         n_cand = cand.count()
         t_cand = time.monotonic() - t0
         t0 = time.monotonic()
         ver = minhash_near_dups_verified(
-            docs, "doc_id", "text", n_hashes=32, bands=bands, threshold=0.7
+            docs, "doc_id", "text", n_hashes=32, bands=bands, threshold=0.7,
+            persisted=cached,
         )
         n_ver = ver.count()
         t_ver = time.monotonic() - t0
+        for df in cached:
+            df.unpersist()
         results.append(
             {
                 "n_docs": n,

@@ -4,7 +4,8 @@ Several modules memoize plan-invariant Column/WindowSpec fragments at
 module level (``plans/round._round_cols``, ``operators/ranking.
 _rank_fragments``, the politeness/seen/canonical/parse/envelope/similarity
 fragment builders): rebuilding them cost 10^2-10^3 py4j round trips of
-serial driver time per crawl round or ANN invocation (BENCH/gap_audit.py).
+serial driver time per crawl round or ANN invocation (perfbench's
+``plans.round.construct_s``).
 The cached handles are unresolved Catalyst expression trees in the driver
 JVM — they survive ``SparkSession.stop()``/recreate because the py4j
 GATEWAY (the JVM process) persists. What they do NOT survive is a gateway

@@ -115,7 +115,8 @@ def canonicalize_url(col: Column | str) -> Column:
     String-keyed calls are memoized: Column objects are immutable unresolved
     expression wrappers, so reusing one across plans/rounds is safe and
     saves ~40 py4j round trips per construction (per-round driver plan-
-    construction time is a measured serial wall cost — BENCH/gap_audit.py).
+    construction time is a measured serial wall cost — perfbench's
+    ``plans.round.construct_s``).
     """
     if isinstance(col, str):
         return _canonicalize_url_cached(col)

@@ -1,4 +1,4 @@
-"""Lineage-truncation helper with a cluster-safe upgrade path.
+"""Lineage truncation and per-loop sessions for iterative algorithms.
 
 Iterative algorithms (connected components) and snapshot-before-rewrite
 flows need lineage TRUNCATION, not just caching: per-round plans otherwise
@@ -6,8 +6,7 @@ grow without bound, and a snapshot whose source is about to be rewritten
 must never be recomputable from that source. ``DataFrame.localCheckpoint``
 truncates, but stores blocks on executor-local storage only — on a real
 cluster, executor loss/decommission (spot instances, dynamic allocation)
-makes the job unrecoverable instead of recomputable (VERDICT r6 "What's
-wrong" #2).
+makes the job unrecoverable instead of recomputable.
 
 ``flat_checkpoint`` picks the strongest available mechanism: a RELIABLE
 ``checkpoint()`` (replicated, survives executor loss) whenever the session
@@ -15,12 +14,17 @@ has a checkpoint directory configured — production deployments set
 ``sc.setCheckpointDir`` to durable storage (HDFS/S3) — falling back to
 ``localCheckpoint`` when none is set (local mode / tests, where executor
 loss cannot happen because driver and executors share one JVM).
+
+An iterative loop sizes its shuffles from its data, not from the caller's
+session width. It runs in a child session (``loop_session``) with its
+own SQL conf, so no engine code writes to the caller's conf: a query the
+caller runs on another thread meanwhile keeps the caller's width and
+AQE. ``hand_over`` moves the loop's input in and its result back out.
 """
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
+import uuid
 
 from pyspark.sql import DataFrame
 
@@ -29,8 +33,8 @@ def flat_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Truncate ``df``'s lineage; reliable checkpoint if a checkpoint dir is
     configured, executor-local checkpoint otherwise.
 
-    Reliable mode persists the frame around the checkpoint (r8, ADVICE
-    r7): ``checkpoint()`` otherwise recomputes the whole plan a second
+    Reliable mode persists the frame around the checkpoint:
+    ``checkpoint()`` otherwise recomputes the whole plan a second
     time for the reliable write — a 2x compute tax on every caller.  The
     cache is dropped as soon as the eager checkpoint has materialized
     (the data now lives in the checkpoint files).  Note the Observation
@@ -51,61 +55,40 @@ def flat_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-_WIDTH_LOCK = threading.Lock()
-# id(session) -> (depth, original width, original AQE flag)
-_WIDTH_STATE: dict[int, tuple[int, str, str]] = {}
+def loop_session(spark, n_rows: int):
+    """A child session for an iterative loop over ``n_rows``-row frames.
+
+    It shares the SparkContext, cache and checkpoints but has its own SQL
+    conf: the caller's runtime SQL conf (a new session would start from
+    the defaults and, e.g., drop the caller's ANSI mode), then the width
+    ``width_for_rows`` derives from the data. At width 1 AQE is off too:
+    one partition gives it nothing to coalesce or split, yet its
+    per-stage re-optimization costs driver round trips per iteration
+    (label propagation on a 1,180-edge graph: 2.7-3.1 s with AQE,
+    1.7-1.9 s without)."""
+    width = width_for_rows(spark, n_rows)
+    child = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            child.conf.set(k, v)
+    child.conf.set("spark.sql.shuffle.partitions", str(width))
+    if width == 1:
+        child.conf.set("spark.sql.adaptive.enabled", "false")
+    return child
 
 
-@contextmanager
-def scoped_shuffle_width(spark, width: int):
-    """Temporarily pin ``spark.sql.shuffle.partitions`` (e.g. to a width
-    DERIVED from a materialized row count — guide §2: partitioning should
-    adapt to data size, not sit at a constant tuned for one scale).  The
-    original value is restored when the OUTERMOST scope exits; plans
-    EXECUTED inside the scope pick up the pinned width, so callers must
-    run their actions inside.
-
-    When the derived width is exactly 1 the scope also disables AQE
-    (r8, measured): a one-partition loop iteration gives AQE nothing to
-    coalesce or skew-split, but its per-stage re-optimization still
-    costs several driver round trips PER ITERATION — on the 1,180-edge
-    bench graph, label propagation dropped 2.7-3.1 s → 1.7-1.9 s with
-    AQE scoped off, bit-identical labels.  The trigger is a property of
-    the DATA (derived width == 1), not of the local core count: a
-    cluster-scale edge list derives width > 1 and keeps AQE's skew
-    handling untouched.
-
-    Concurrency-safe by refcount: scopes may be entered from several
-    driver threads of one session (near_dup_clusters runs its two CC
-    algorithms concurrently). Overlapping scopes are last-writer-wins on
-    the width and the AQE flag — any width produces identical results
-    here (the loops' aggregations are partitioning-independent, and AQE
-    never changes results); what the refcount guarantees is that the
-    SESSION values restored at the end are the pre-scope originals,
-    never a concurrent scope's temporary pin."""
-    key = "spark.sql.shuffle.partitions"
-    aqe_key = "spark.sql.adaptive.enabled"
-    sid = id(spark)
-    with _WIDTH_LOCK:
-        depth, orig, orig_aqe = _WIDTH_STATE.get(sid, (0, "", ""))
-        if depth == 0:
-            orig = spark.conf.get(key)
-            orig_aqe = spark.conf.get(aqe_key)
-        _WIDTH_STATE[sid] = (depth + 1, orig, orig_aqe)
-        spark.conf.set(key, str(int(width)))
-        if int(width) == 1:
-            spark.conf.set(aqe_key, "false")
+def hand_over(df: DataFrame, session) -> DataFrame:
+    """``df`` as a frame of ``session`` (same plan and data; queries on it
+    are planned with ``session``'s conf). Passes through a uniquely named
+    global temp view, dropped at once: the returned frame holds the
+    already-analyzed plan, not the view."""
+    name = f"handover_{uuid.uuid4().hex}"
+    db = session.conf.get("spark.sql.globalTempDatabase")
+    df.createOrReplaceGlobalTempView(name)
     try:
-        yield
+        return session.table(f"{db}.{name}")
     finally:
-        with _WIDTH_LOCK:
-            depth, orig, orig_aqe = _WIDTH_STATE[sid]
-            if depth == 1:
-                spark.conf.set(key, orig)
-                spark.conf.set(aqe_key, orig_aqe)
-                del _WIDTH_STATE[sid]
-            else:
-                _WIDTH_STATE[sid] = (depth - 1, orig, orig_aqe)
+        session.catalog.dropGlobalTempView(name)
 
 
 def width_for_rows(spark, n_rows: int, rows_per_partition: int = 1 << 20) -> int:

@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 
 from colymer_acquirers_spark.operators.ckpt import (
     flat_checkpoint,
-    scoped_shuffle_width,
-    width_for_rows,
+    hand_over,
+    loop_session,
 )
 
 
@@ -37,6 +37,20 @@ def pin_shuffle_width(df: DataFrame, *keys: str) -> DataFrame:
     that AQE preserves."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *keys)
+
+
+def _cache_for_caller(df: DataFrame, persisted: list | None) -> DataFrame:
+    """Cache ``df`` only when the caller will release it: the frame goes
+    into ``persisted`` for the caller to unpersist. Without that list
+    nothing is cached (a cache would outlive the call for the rest of
+    the session), so ``df``'s lineage recomputes once per consumer."""
+    if persisted is None:
+        return df
+    from pyspark.storagelevel import StorageLevel
+
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    persisted.append(df)
+    return df
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
@@ -81,6 +95,11 @@ def minhash_signatures(
     identical by construction.
     """
     if word_sets is not None:
+        if sorted(word_sets.columns) != sorted([id_col, "__ws"]):
+            raise ValueError(
+                f"word_sets must have exactly the columns ({id_col!r}, "
+                f"'__ws'), got {word_sets.columns}"
+            )
         words = word_sets.select(
             F.col(id_col), F.explode(F.col("__ws")).alias("w")
         )
@@ -142,6 +161,8 @@ def minhash_lsh_pairs(
     ``politeness_split``): any frame this call persists is appended so
     the CALLER owns the unpersist — catalog queries must not let a
     cached intermediate outlive one invocation (queries._drop_live_caches).
+    Without it the banded rows are not cached, and the diagnostic and the
+    self-join each recompute them.
     """
     rows = n_hashes // bands
     sigs = minhash_signatures(df, id_col, text_col, n_hashes, word_sets=word_sets)
@@ -175,23 +196,14 @@ def minhash_lsh_pairs(
         )
     )
     if bucket_cap is None and hot_bucket_warn is not None:
-        # persist (NOT localCheckpoint) BEFORE the width pin: the diagnostic
-        # aggregation and the self-join share the materialized
-        # shingle→minhash lineage, and the pin is applied on top afterwards
-        # — a cache taken after the pin would hide it (the join would
-        # re-shuffle with an ENSURE_REQUIREMENTS exchange that AQE may
-        # coalesce, the exact quadratic-collapse trap the pin exists to
-        # prevent; caught by test_pair_expansion_joins_keep_explicit_width).
-        # persist keeps lineage, so on a real cluster a lost executor's
-        # blocks RECOMPUTE instead of failing the job — localCheckpoint
-        # blocks are executor-local and unrecoverable (VERDICT r6 #2), a
-        # real failure mode on the DEFAULT path of the flagship dedup
-        # operator under spot executors at 100 TB.
-        from pyspark.storagelevel import StorageLevel
-
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted is not None:
-            persisted.append(banded)
+        # cache BEFORE the width pin: the diagnostic and the self-join share
+        # the shingle→minhash lineage, and a cache taken after the pin
+        # would hide it (the join would re-shuffle with an exchange AQE may
+        # coalesce — the quadratic-collapse trap the pin prevents; see
+        # test_pair_expansion_joins_keep_explicit_width). persist, not
+        # localCheckpoint: a lost executor's blocks recompute instead of
+        # failing the job.
+        banded = _cache_for_caller(banded, persisted)
         max_n = (
             banded.groupBy("band_idx", "band_key")
             .agg(F.count(F.lit(1)).alias("__n"))
@@ -221,11 +233,7 @@ def minhash_lsh_pairs(
         # (the expensive part) re-executes per reference (measured 21 →
         # 49 s on the skew corpus). persist, not localCheckpoint — keeps
         # the lineage recomputable under executor loss (see above).
-        from pyspark.storagelevel import StorageLevel
-
-        banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        if persisted is not None:
-            persisted.append(banded)
+        banded = _cache_for_caller(banded, persisted)
         stats = banded.groupBy("band_idx", "band_key").agg(
             F.count(F.lit(1)).alias("__n"),
             F.min(F.col(id_col)).alias("__hub"),
@@ -519,13 +527,11 @@ def near_dup_components(
     if max_iters is None:
         max_iters = 25
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    # the edge count rides the eager checkpoint job as an Observation
-    # (r8): it replaces the former isEmpty probe job AND sizes the loop's
-    # shuffle width from the data instead of the session constant —
-    # near-dup edge lists are a sliver of the corpus, and 32-task
-    # shuffles over a few hundred rows cost more scheduling than compute
-    # (guide §2: scale-adaptive partitioning). An AQE-pruned empty plan
-    # resolves the observation to a fieldless row, so absence ⇒ 0 rows.
+    # the edge count rides the eager checkpoint job as an Observation and
+    # sizes the loop's shuffle width from the data instead of the session
+    # constant — near-dup edge lists are a sliver of the corpus. An
+    # AQE-pruned empty plan resolves the observation to a fieldless row,
+    # so absence ⇒ 0 rows.
     obs_edges = Observation()
     edges = flat_checkpoint(
         edges.unionByName(
@@ -536,51 +542,49 @@ def near_dup_components(
         eager=True,
     )
     n_edges = int(obs_edges.get.get("n", 0) or 0)
+    if n_edges == 0:
+        return edges.select(F.col("a").alias("id"), F.col("a").alias("component"))
+    # the loop's shuffles run in a child session at the derived width;
+    # the result is handed back, so the caller consumes it at its own
+    spark = pairs.sparkSession
+    edges = hand_over(edges, loop_session(spark, n_edges))
     labels = (
         edges.select(F.col("a").alias("id")).distinct().withColumn("comp", F.col("id"))
     )
-    if n_edges == 0:
-        return labels.select(F.col("id"), F.col("comp").alias("component"))
-    spark = pairs.sparkSession
     converged = False
-    # loop shuffles run at the derived width (restored on exit); the
-    # checkpointed frames persist beyond the scope, so the caller's later
-    # consumption is unaffected
-    with scoped_shuffle_width(spark, width_for_rows(spark, n_edges)):
-        for _ in range(max_iters):
-            neighbor_min = (
-                edges.join(labels, edges["a"] == labels["id"])
-                .groupBy(F.col("b").alias("id2"))
-                .agg(F.min("comp").alias("ncomp"))
+    for _ in range(max_iters):
+        neighbor_min = (
+            edges.join(labels, edges["a"] == labels["id"])
+            .groupBy(F.col("b").alias("id2"))
+            .agg(F.min("comp").alias("ncomp"))
+        )
+        # convergence count rides an Observation on the SAME eager
+        # checkpoint job that materializes the round (new comp != old
+        # comp ⟺ ncomp < comp) — exact because the eager checkpoint is
+        # ONE job over every partition (not a shared-cache
+        # co-materialization, the partial-count trap documented in
+        # politeness.robots_filter), so no separate probe job runs.
+        obs = Observation()
+        new_labels = (
+            labels.join(neighbor_min, labels["id"] == F.col("id2"), "left")
+            .observe(
+                obs,
+                F.count(
+                    F.when(F.col("ncomp") < F.col("comp"), F.lit(1))
+                ).alias("changed"),
             )
-            # convergence count rides an Observation on the SAME eager
-            # checkpoint job that materializes the round (new comp != old
-            # comp ⟺ ncomp < comp) — exact because the eager checkpoint is
-            # ONE job over every partition (not a shared-cache
-            # co-materialization, the partial-count trap documented in
-            # politeness.robots_filter), and it replaces the former
-            # per-round join + isEmpty probe job.
-            obs = Observation()
-            new_labels = (
-                labels.join(neighbor_min, labels["id"] == F.col("id2"), "left")
-                .observe(
-                    obs,
-                    F.count(
-                        F.when(F.col("ncomp") < F.col("comp"), F.lit(1))
-                    ).alias("changed"),
-                )
-                .select(
-                    "id",
-                    F.least(
-                        F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
-                    ).alias("comp"),
-                )
-                .transform(lambda d: flat_checkpoint(d, eager=True))
+            .select(
+                "id",
+                F.least(
+                    F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
+                ).alias("comp"),
             )
-            labels = new_labels
-            if int(obs.get["changed"]) == 0:
-                converged = True
-                break
+            .transform(lambda d: flat_checkpoint(d, eager=True))
+        )
+        labels = new_labels
+        if int(obs.get["changed"]) == 0:
+            converged = True
+            break
     if not converged:
         # exiting on the iteration budget means labels are still moving:
         # the result would be silently OVER-SPLIT (multiple representatives
@@ -595,7 +599,9 @@ def near_dup_components(
             RuntimeWarning,
             stacklevel=2,
         )
-    return labels.select(F.col("id"), F.col("comp").alias("component"))
+    return hand_over(
+        labels.select(F.col("id"), F.col("comp").alias("component")), spark
+    )
 
 
 def connected_components_star(
@@ -626,9 +632,8 @@ def connected_components_star(
     Same return contract as ``near_dup_components``: (id, component=min
     id) for every id in ``pairs``.
     """
-    # edge count rides the eager checkpoint (replaces the isEmpty probe
-    # job) and derives the loop's shuffle width from the data — see the
-    # near_dup_components note (r8, guide §2 scale-adaptive partitioning)
+    # the edge count rides the eager checkpoint and sizes the loop
+    # session, as in near_dup_components
     obs_e = Observation()
     e = flat_checkpoint(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
@@ -640,53 +645,55 @@ def connected_components_star(
     n_e = int(obs_e.get.get("n", 0) or 0)
     converged = n_e == 0  # empty input: all nodes are their own root
     spark = pairs.sparkSession
-    with scoped_shuffle_width(spark, width_for_rows(spark, n_e)):
-        # the node set's checkpoint also runs inside the width scope (its
-        # distinct is the same order of magnitude as the edge list)
-        nodes = (
-            pairs.select(F.col(id_a).alias("n"))
-            .unionByName(pairs.select(F.col(id_b).alias("n")))
+    loop = loop_session(spark, n_e)
+    e = hand_over(e, loop)
+    # the node set's checkpoint also runs in the loop session (its
+    # distinct is the same order of magnitude as the edge list)
+    pairs = hand_over(pairs, loop)
+    nodes = (
+        pairs.select(F.col(id_a).alias("n"))
+        .unionByName(pairs.select(F.col(id_b).alias("n")))
+        .distinct()
+        .transform(lambda d: flat_checkpoint(d, eager=True))
+    )
+    for _ in range(max_iters):
+        if converged:
+            break
+        sym = e.unionByName(
+            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        mins = sym.groupBy("u").agg(
+            F.least(F.min("v"), F.col("u")).alias("mn")
+        )
+        large = (
+            sym.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+        )
+        m2 = large.groupBy("u").agg(F.min("v").alias("mn"))
+        e_new = (
+            large.join(m2, "u")
+            .filter(F.col("v") != F.col("mn"))
+            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
+            .unionByName(m2.select("u", F.col("mn").alias("v")))
+            .filter(F.col("u") != F.col("v"))
             .distinct()
             .transform(lambda d: flat_checkpoint(d, eager=True))
         )
-        for _ in range(max_iters):
-            if converged:
-                break
-            sym = e.unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = sym.groupBy("u").agg(
-                F.least(F.min("v"), F.col("u")).alias("mn")
-            )
-            large = (
-                sym.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            m2 = large.groupBy("u").agg(F.min("v").alias("mn"))
-            e_new = (
-                large.join(m2, "u")
-                .filter(F.col("v") != F.col("mn"))
-                .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-                .unionByName(m2.select("u", F.col("mn").alias("v")))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                .transform(lambda d: flat_checkpoint(d, eager=True))
-            )
-            delta = (
-                e_new.select("u", "v", F.lit(1).alias("s"))
-                .unionByName(e.select("u", "v", F.lit(-1).alias("s")))
-                .groupBy("u", "v")
-                .agg(F.sum("s").alias("d"))
-                .filter(F.col("d") != 0)
-            )
-            unchanged = delta.isEmpty()
-            e = e_new
-            if unchanged:
-                converged = True
-                break
+        delta = (
+            e_new.select("u", "v", F.lit(1).alias("s"))
+            .unionByName(e.select("u", "v", F.lit(-1).alias("s")))
+            .groupBy("u", "v")
+            .agg(F.sum("s").alias("d"))
+            .filter(F.col("d") != 0)
+        )
+        unchanged = delta.isEmpty()
+        e = e_new
+        if unchanged:
+            converged = True
+            break
     if not converged:
         import warnings
 
@@ -704,11 +711,12 @@ def connected_components_star(
     roots = e.groupBy(F.col("u").alias("id")).agg(
         F.min("v").alias("component")
     )
-    return nodes.join(
-        roots, nodes["n"] == roots["id"], "left"
-    ).select(
-        F.col("n").alias("id"),
-        F.coalesce(F.col("component"), F.col("n")).alias("component"),
+    return hand_over(
+        nodes.join(roots, nodes["n"] == roots["id"], "left").select(
+            F.col("n").alias("id"),
+            F.coalesce(F.col("component"), F.col("n")).alias("component"),
+        ),
+        spark,
     )
 
 
@@ -746,20 +754,20 @@ def minhash_near_dups_verified(
     work anywhere. Recall is the LSH recall: 1-(1-s^rows)^bands for true
     similarity s. Returns (id_a, id_b, jaccard).
     """
-    from pyspark.storagelevel import StorageLevel
-
     # ONE tokenize+array_distinct pass over the corpus serves BOTH the
     # signature lineage (via word_sets=) and the per-pair attach joins
     # below (r8 session 3) — before, the LSH stage and the verify stage
     # each ran their own full text scan + split + distinct. The cache
     # materializes inside the LSH stage's banded-checkpoint job; the
-    # attach joins then read it instead of re-scanning the corpus.
-    words = df.select(
-        F.col(id_col),
-        F.array_distinct(F.split(F.col(text_col), " ")).alias("__ws"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if persisted is not None:
-        persisted.append(words)
+    # attach joins then read it instead of re-scanning the corpus. It is
+    # taken only when the caller passes ``persisted`` to release it.
+    words = _cache_for_caller(
+        df.select(
+            F.col(id_col),
+            F.array_distinct(F.split(F.col(text_col), " ")).alias("__ws"),
+        ),
+        persisted,
+    )
     cand = minhash_lsh_pairs(
         df, id_col, text_col, n_hashes, bands, persisted=persisted,
         word_sets=words,

@@ -27,8 +27,8 @@ SORT_KEYS = ["priority", "depth", "canonical_url"]
 # Plan-invariant Column/WindowSpec fragments are memoized module-wide:
 # Column objects are immutable unresolved-expression wrappers, safe to reuse
 # across DataFrames and rounds. Rebuilding them each round cost hundreds of
-# py4j round trips of serial driver time per crawl round (the round-boundary
-# zero-task gaps in BENCH/gap_audit.py).
+# py4j round trips of serial driver time per crawl round (perfbench's
+# ``plans.round.construct_s``).
 
 
 @fragments.register

@@ -10,10 +10,10 @@ identical at any parallelism — the property the determinism tests pin down.
 Offsets are computed LAZILY inside the same plan: a groupBy count over the
 cached range-partitioned intermediate (≤ num_partitions rows), an exclusive
 prefix sum over partition id, and a broadcast join back. No driver action is
-needed to construct the ranked output — the round-6 gap audit
-(BENCH/gap_audit.py) measured the former eager ``collect`` at ~14
+needed to construct the ranked output — an eager ``collect`` costs ~14
 AQE-materialized driver jobs per crawl round (43 of 113 warm jobs), a
-core-count-independent serial share that capped N→4N wall scaling. With the
+core-count-independent serial share that caps N→4N wall scaling
+(perfbench's ``spark.idle_core_share``). With the
 offsets as a lazy subplan, that materialization work rides the output
 writes, which already overlap in a thread pool.
 """
@@ -37,7 +37,7 @@ _RN = "__rank_rn"
 def _rank_fragments(keys: tuple) -> dict:
     """Plan-invariant Column fragments, memoized per key set — rebuilding
     them every round cost hundreds of py4j round trips of serial driver
-    time (round-boundary gaps, BENCH/gap_audit.py)."""
+    time (perfbench's ``plans.round.construct_s``)."""
     w = Window.partitionBy(_PID).orderBy(*[F.col(k).asc() for k in keys])
     w_off = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
     return {

@@ -90,7 +90,7 @@ def merge_frontier(df: DataFrame) -> DataFrame:
 @lru_cache(maxsize=1)
 def _merge_fragments():
     """Plan-invariant Column fragments (reused across rounds — py4j
-    round-trip economy, see BENCH/gap_audit.py round-boundary gaps)."""
+    round-trip economy, measured by ``plans.round.construct_s``)."""
     agg = F.min(
         F.struct("priority", "depth", "url", "discovered_round")
     ).alias("m")

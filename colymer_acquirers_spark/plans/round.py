@@ -33,8 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 # SPARK_GRAFT_TRACE=1 → print driver-side phase timings (plan construction
-# vs pooled execution vs bookkeeping) per round; the knob behind the
-# round-boundary gap attribution in BENCH/gap_audit.py
+# vs pooled execution vs bookkeeping) per round
 _TRACE = os.environ.get("SPARK_GRAFT_TRACE", "") == "1"
 
 
@@ -75,9 +74,9 @@ def _round_cols(parse_impl: str) -> dict:
     session per parse impl. Column objects are immutable unresolved-
     expression wrappers, safe to reuse across DataFrames and rounds;
     rebuilding them every round cost ~2,000 py4j round trips ≈ 1.3-1.8 s of
-    zero-running-task driver time per round — the round-boundary gaps in
-    BENCH/gap_audit.py and a core-count-independent Amdahl term at any
-    cluster size."""
+    zero-running-task driver time per round (perfbench's
+    ``plans.round.construct_s``), a core-count-independent Amdahl term at
+    any cluster size."""
     parse_fn = parse_page_expr if parse_impl == "jvm" else parse_page
     return {
         "crawl_order": (
@@ -232,12 +231,12 @@ def run_round(
     # Metric-only counts (candidates / robots-blocked / new-url) do NOT run
     # here as eager jobs — each pre-write action serializes the whole
     # upstream materialization into a driver-gap-ridden AQE job cascade
-    # (BENCH/gap_audit.py). They run as pooled jobs CONCURRENT with the
-    # output writes below, reading the same persisted frames (cache block
-    # locking keeps co-materialization exactly-once, and a count job is
-    # exact no matter which job computed the cache — unlike an Observation
-    # under a cache, whose accumulator would only see the partitions its
-    # own job computed).
+    # (perfbench's ``spark.idle_core_share``). They run as pooled jobs
+    # CONCURRENT with the output writes below, reading the same persisted
+    # frames (cache block locking keeps co-materialization exactly-once,
+    # and a count job is exact no matter which job computed the cache —
+    # unlike an Observation under a cache, whose accumulator would only
+    # see the partitions its own job computed).
     boundary_deferred = None
     n_deferred = 0
     extra_persisted: list[DataFrame] = []
@@ -315,8 +314,8 @@ def run_round(
     def _write(df, name):
         # job description is a thread-local Spark property: each pool
         # thread tags its own write so event-log/UI stages attribute to
-        # the output they produce (observability at cluster scale; the
-        # BENCH/cpu_audit.py per-stage CPU audit keys off this)
+        # the output they produce (observability at cluster scale;
+        # perfbench's ``spark.task_s.<output>`` keys off this)
         df.sparkSession.sparkContext.setJobDescription(
             f"round{rnd}:write:{name}"
         )

@@ -849,8 +849,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # list, but each is a driver-blocking iteration loop of small jobs
         # — run them CONCURRENTLY (guide §2.6 overlap-independent-jobs) so
         # one algorithm's jobs back-fill the idle cores of the other's
-        # loop latency. scoped_shuffle_width is refcounted for exactly
-        # this overlap (operators/ckpt.py).
+        # loop latency. Each loop runs in its own child session
+        # (operators/ckpt.loop_session), so neither changes this
+        # session's conf or the other's width.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=1) as pool:

@@ -97,6 +97,32 @@ def test_minhash_signatures_word_sets_path_identical(docs):
     assert direct == shared
 
 
+def test_minhash_signatures_rejects_foreign_word_sets(docs):
+    with pytest.raises(ValueError, match="word_sets"):
+        minhash_signatures(docs, "doc_id", "text", 8, word_sets=docs)
+
+
+def test_minhash_without_persisted_leaves_no_cache(spark):
+    """Called without ``persisted``, neither minhash entry point may leave
+    a cached frame behind: nobody would ever release it."""
+    from colymer_acquirers_spark.operators.dedup import minhash_near_dups_verified
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+
+    # fresh rows per call: a cache an earlier test leaked over the module's
+    # docs would match structurally and hide a new one
+    def fresh(offset):
+        return spark.createDataFrame(
+            [(i + offset, t) for i, t in DOCS], ["doc_id", "text"]
+        )
+
+    before = set(rdds().keySet())
+    minhash_lsh_pairs(fresh(1000), "doc_id", "text", 16, 8).collect()
+    assert set(rdds().keySet()) - before == set()
+    minhash_near_dups_verified(fresh(2000), "doc_id", "text").collect()
+    assert set(rdds().keySet()) - before == set()
+
+
 def test_minhash_lsh_finds_dups(docs):
     # 8 bands × 2 rows: P(collide) ≈ 1-(1-j²)⁸ ≈ 0.9995 at j ≈ 0.78
     pairs = {(r["id_a"], r["id_b"]) for r in
@@ -734,34 +760,110 @@ def test_flat_checkpoint_uses_reliable_dir_when_configured(spark, tmp_path):
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(opt_empty)
 
 
-def test_scoped_width_one_disables_aqe_and_restores(spark):
-    """r8: a width-1 loop scope (tiny derived width — the whole iteration
-    fits one partition) must also scope AQE OFF (its per-stage
-    re-optimization costs driver round trips per CC iteration with
-    nothing to coalesce or skew-split at one partition), while a
-    width > 1 scope leaves AQE untouched (cluster-scale skew handling).
-    Both confs must restore to the pre-scope originals on OUTERMOST
-    exit, including nested/refcounted scopes."""
-    from colymer_acquirers_spark.operators.ckpt import scoped_shuffle_width
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _hash_widths(plan: str) -> set[int]:
+    import re
+
+    return {int(w) for w in re.findall(r"hashpartitioning\([^()]*, (\d+)\)", plan)}
+
+
+def test_components_loop_leaves_caller_session_alone(spark):
+    """While a components loop runs on another driver thread, the caller's
+    session keeps its conf: a parent groupBy still plans under AQE at the
+    session width, and pin_shuffle_width pins the session width, not the
+    loop's derived width of 1."""
+    import threading
+    import time
+
+    from colymer_acquirers_spark.operators.dedup import (
+        near_dup_components,
+        pin_shuffle_width,
+    )
 
     wkey, akey = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
-    orig_w, orig_a = spark.conf.get(wkey), spark.conf.get(akey)
-    assert orig_a == "true"  # session default; the scope must restore it
+    width, aqe = spark.conf.get(wkey), spark.conf.get(akey)
+    assert aqe == "true" and int(width) > 1
+    chain = [(i, i + 1) for i in range(12)]  # 13 label iterations
+    pairs = spark.createDataFrame(chain, ["id_a", "id_b"])
+    out: dict = {}
 
-    with scoped_shuffle_width(spark, 1):
-        assert spark.conf.get(wkey) == "1"
-        assert spark.conf.get(akey) == "false"
-        # nested scope (the concurrent two-algorithm overlap shape):
-        # AQE stays off, and the inner exit must NOT restore early
-        with scoped_shuffle_width(spark, 1):
-            assert spark.conf.get(akey) == "false"
-        assert spark.conf.get(akey) == "false"
-        assert spark.conf.get(wkey) == "1"
-    assert spark.conf.get(wkey) == orig_w
-    assert spark.conf.get(akey) == orig_a
+    def run():
+        try:
+            out["got"] = {r["id"]: r["component"]
+                          for r in near_dup_components(pairs).collect()}
+        except Exception as e:  # re-raised on the main thread
+            out["err"] = e
 
-    with scoped_shuffle_width(spark, 4):
-        assert spark.conf.get(wkey) == "4"
-        assert spark.conf.get(akey) == orig_a  # width > 1: AQE untouched
-    assert spark.conf.get(wkey) == orig_w
-    assert spark.conf.get(akey) == orig_a
+    parent = spark.range(100).withColumn("k", F.col("id") % 7)
+    loop = threading.Thread(target=run)
+    loop.start()
+    checks, deadline = 0, time.monotonic() + 300
+    while loop.is_alive() and time.monotonic() < deadline:
+        assert (spark.conf.get(wkey), spark.conf.get(akey)) == (width, aqe)
+        agg = _plan(parent.groupBy("k").count())
+        assert agg.startswith("AdaptiveSparkPlan"), agg
+        assert _hash_widths(agg) == {int(width)}, agg
+        assert _hash_widths(_plan(pin_shuffle_width(parent, "k"))) == {int(width)}
+        checks += 1
+    loop.join(timeout=5)
+    assert not loop.is_alive()
+    if "err" in out:
+        raise out["err"]
+    assert out["got"] == {i: 0 for i in range(13)}
+    assert checks >= 3, checks
+
+
+def test_components_loops_plan_in_child_session(spark, monkeypatch):
+    """Both loops plan their iterations in a child session: width 1 with no
+    AdaptiveSparkPlan on a tiny graph, and the caller's runtime conf
+    (here ANSI mode) carried over. The caller's conf is unchanged after."""
+    import colymer_acquirers_spark.operators.dedup as dedup_mod
+    from colymer_acquirers_spark.operators.ckpt import flat_checkpoint
+
+    seen = []
+
+    def spying_ckpt(df, eager=True):
+        session = df.sparkSession
+        seen.append((session, session.conf.get("spark.sql.ansi.enabled"), _plan(df)))
+        return flat_checkpoint(df, eager=eager)
+
+    monkeypatch.setattr(dedup_mod, "flat_checkpoint", spying_ckpt)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"])
+    before = spark.conf.getAll
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for method in ("label", "star"):
+            seen.clear()
+            got = {r["id"]: r["component"]
+                   for r in dedup_mod.near_dup_components(pairs, method=method).collect()}
+            assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}, method
+            # the first checkpoint (the edge list that sizes the loop) runs
+            # in the caller's session; every later one in the child
+            assert seen[0][0] is spark
+            loop = seen[1:]
+            assert loop and all(s is not spark for s, _, _ in loop), method
+            for _, ansi, plan in loop:
+                assert ansi == "true", method
+                assert "AdaptiveSparkPlan" not in plan, plan
+                assert _hash_widths(plan) == {1}, plan
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert spark.conf.getAll == before
+
+
+def test_loop_session_width_follows_rows(spark):
+    """A large row count derives a child width > 1 and keeps AQE on; a
+    small one derives width 1 and turns AQE off in the child only."""
+    from colymer_acquirers_spark.operators.ckpt import loop_session
+
+    wkey, akey = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    width = spark.conf.get(wkey)
+    big = loop_session(spark, n_rows=3 << 20)
+    assert (big.conf.get(wkey), big.conf.get(akey)) == ("3", "true")
+    small = loop_session(spark, n_rows=10)
+    assert (small.conf.get(wkey), small.conf.get(akey)) == ("1", "false")
+    assert (spark.conf.get(wkey), spark.conf.get(akey)) == (width, "true")
