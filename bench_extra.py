@@ -1,6 +1,6 @@
 #!/usr/bin/env python
-"""Round-8 optimization measurement harness (bench.py is FROZEN — this file
-holds the extra instrumentation the optimization round needs).
+"""Catalog-leaf measurement harness (bench.py is FROZEN — this file holds
+the extra instrumentation: per-leaf timings, plans, one traced crawl).
 
 Modes:
   python bench_extra.py queries [name ...]   # time each catalog query with a
@@ -11,9 +11,9 @@ Modes:
                                              # SPARK_GRAFT_TRACE honoring env
 
 Env:
-  SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
-  BENCH_EXTRA_REPS (default 3), BENCH_EXTRA_TAG (explain file suffix,
-  default "before").
+  SPARK_GRAFT_SF_DIR (default: the sf0.1 test data, see SF_DIR),
+  SPARK_GRAFT_CPUS (default: the machine's core count), BENCH_EXTRA_REPS
+  (default 3), BENCH_EXTRA_TAG (explain file suffix, default "before").
 """
 
 from __future__ import annotations
@@ -27,7 +27,8 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local[N] at the machine's core count, as session.get_spark defaults
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
 REPS = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
 TAG = os.environ.get("BENCH_EXTRA_TAG", "before")
 

@@ -26,15 +26,21 @@ def _md5_long(col) -> F.Column:
 
 
 def pin_shuffle_width(df: DataFrame, *keys: str) -> DataFrame:
-    """Repartition on the join keys with an EXPLICIT partition count.
+    """Repartition on ``keys`` with an EXPLICIT partition count (the
+    session width), which AQE preserves. Two uses:
 
-    The pair-generation tables here are byte-small (ids plus a couple of
-    longs) even when the corpus is large, so AQE's byte-based shuffle
-    coalescing collapses the pre-join exchange to ~1 partition — and the
-    quadratic pair EXPANSION plus per-pair verify math then run
-    single-task (measured: verified-minhash 168 s → 12-23 s at sf0.1
-    after pinning). An explicit numPartitions is user-specified width
-    that AQE preserves."""
+    - ahead of a pair-expansion join: the pair-generation tables here
+      are byte-small (ids plus a couple of longs) even when the corpus
+      is large, so AQE's byte-based shuffle coalescing collapses the
+      pre-join exchange to ~1 partition — and the quadratic pair
+      EXPANSION plus per-pair verify math then run single-task
+      (measured: verified-minhash 168 s → 12-23 s at sf0.1 after
+      pinning);
+    - ahead of per-document work that a ``groupBy`` on the same key
+      folds (the per-word md5s of ``minhash_signatures``/``simhash64``):
+      a corpus that scans as one partition is spread over every core,
+      and the aggregate reuses the hash partitioning instead of adding
+      its own exchange."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *keys)
 
@@ -82,17 +88,22 @@ def minhash_signatures(
     per document BEFORE the explode (``array_distinct`` — a per-row JVM
     op, no shuffle): min over a set equals min over the multiset, so the
     signatures are bit-identical while the n_hashes md5+conv evaluations
-    run once per *distinct* word instead of once per occurrence (r8:
-    measured 2.3x fewer hashed rows on the documents fixture; natural
-    text repeats words at every scale).
+    run once per *distinct* word instead of once per occurrence (2.3x
+    fewer hashed rows on the documents fixture; natural text repeats
+    words at every scale).
+
+    The word-set frame is hash-partitioned on ``id_col`` at the session
+    width before the explode: a corpus that scans as one partition (one
+    small parquet file) would otherwise hash every word in one task. The
+    ``groupBy(id_col)`` reuses that partitioning, so the spread replaces
+    the aggregate's own exchange rather than adding one.
 
     ``word_sets`` (optional): a pre-built ``(id_col, __ws)`` frame whose
     ``__ws`` is exactly ``array_distinct(split(text_col, ' '))`` —
     callers that ALSO need the distinct word sets (the verify step joins
     them back per candidate pair) pass their persisted frame here so one
     tokenize+distinct pass over the corpus serves both consumers instead
-    of two full text scans (r8 session 3; guide §2.3/§5). Values are
-    identical by construction.
+    of two full text scans. Values are identical by construction.
     """
     if word_sets is not None:
         if sorted(word_sets.columns) != sorted([id_col, "__ws"]):
@@ -100,14 +111,14 @@ def minhash_signatures(
                 f"word_sets must have exactly the columns ({id_col!r}, "
                 f"'__ws'), got {word_sets.columns}"
             )
-        words = word_sets.select(
-            F.col(id_col), F.explode(F.col("__ws")).alias("w")
-        )
     else:
-        words = df.select(
+        word_sets = df.select(
             F.col(id_col),
-            F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("w"),
+            F.array_distinct(F.split(F.col(text_col), " ")).alias("__ws"),
         )
+    words = pin_shuffle_width(word_sets, id_col).select(
+        F.col(id_col), F.explode(F.col("__ws")).alias("w")
+    )
     aggs = [
         F.min(_md5_long(F.concat(F.col("w"), F.lit(f"#{j}")))).alias(f"sig{j}")
         for j in range(n_hashes)
@@ -153,9 +164,7 @@ def minhash_lsh_pairs(
     h(h-1)/2 expansion BEFORE the self-join attempts it, not during.
     The emitted pairs are byte-identical with or without the check
     (observational only); set ``hot_bucket_warn=None`` to skip the
-    extra job. The banded rows are lazily checkpointed first, so the
-    expensive shingle→minhash lineage is materialized once and shared
-    by the diagnostic and both self-join sides.
+    extra job.
 
     ``persisted`` (optional out-param, same contract as
     ``politeness_split``): any frame this call persists is appended so
@@ -265,11 +274,11 @@ def minhash_lsh_pairs(
             F.col(f"b.{id_col}").alias("id_b"),
         )
         return clique.unionByName(big_star).dropDuplicates(["id_a", "id_b"])
-    # Only the BUILD side of the self-join carries the explicit-width pin
-    # (r8, guide §2.5/§3.1): pinning BOTH sides hash-partitioned the probe
-    # side by the bucket key too, which concentrated every hot bucket's
-    # h(h-1)/2 clique expansion into ONE task — under the (local-scale)
-    # broadcast plan the probe side has NO distribution requirement, so
+    # Only the BUILD side of the self-join carries the explicit-width pin:
+    # pinning BOTH sides hash-partitioned the probe side by the bucket key
+    # too, which concentrated every hot bucket's h(h-1)/2 clique
+    # expansion into ONE task — under the (local-scale) broadcast plan
+    # the probe side has NO distribution requirement, so
     # leaving it on its upstream doc-uniform layout parallelizes the
     # expansion across every core, while the pinned build side still
     # defeats AQE's byte-based collapse whenever the planner picks a
@@ -311,7 +320,9 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     contributes +1/-1 to its lane; the sign vector packs into one int64.
     All JVM expressions (conv/shift/sum) — no UDF.
     """
-    words = df.select(
+    # spread over the session width before the per-word md5s, as in
+    # minhash_signatures; the lanes groupBy reuses the partitioning
+    words = pin_shuffle_width(df.select(id_col, text_col), id_col).select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("w")
     )
     digest = F.md5(F.col("w").cast("binary"))
@@ -381,7 +392,7 @@ def simhash_near_dups(
     keyed = sh.select(
         F.col(id_col), F.col("simhash"), F.explode(F.array(*chunks)).alias("ck")
     ).select(id_col, "simhash", "ck.chunk_idx", "ck.chunk_key")
-    # build-side-only pin (r8) — same reasoning as minhash_lsh_pairs: the
+    # build-side-only pin — same reasoning as minhash_lsh_pairs: the
     # probe side keeps its doc-uniform layout so a hot chunk bucket's
     # quadratic expansion parallelizes instead of landing in one task
     a = keyed.alias("a")
@@ -412,6 +423,7 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
+    persisted: list | None = None,
 ) -> DataFrame:
     """Word-n-gram Jaccard similarity for pairs sharing ≥1 shingle.
 
@@ -427,12 +439,16 @@ def ngram_jaccard_pairs(
     for pairs whose overlap is mostly stop-shingles — a recall, never a
     precision, loss for a ≥threshold filter (denominator counts stay
     uncapped). None (default) = exact.
+
+    ``persisted`` (optional out-param, same contract as
+    ``minhash_lsh_pairs``): the shingle set is referenced by the per-doc
+    counts, the DF-cap filter AND both self-join sides, so it is cached
+    and appended for the caller to unpersist; without it nothing is
+    cached and the explode + dedup shuffle runs once per reference.
     """
     toks = F.split(F.col(text_col), " ")
     n_sh = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    from pyspark.storagelevel import StorageLevel
-
-    shingled = (
+    shingled = _cache_for_caller(
         df.select(
             F.col(id_col),
             F.explode(
@@ -442,13 +458,8 @@ def ngram_jaccard_pairs(
                 )
             ).alias("sh"),
         )
-        .dropDuplicates([id_col, "sh"])
-        # the shingle set is referenced by the per-doc counts, the DF-cap
-        # filter AND both self-join sides — persist so the explode +
-        # dedup shuffle runs once, not once per reference (r8; persist
-        # keeps lineage recomputable under executor loss, unlike
-        # localCheckpoint — see minhash_lsh_pairs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .dropDuplicates([id_col, "sh"]),
+        persisted,
     )
     counts = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     if max_doc_freq is not None:
@@ -459,7 +470,7 @@ def ngram_jaccard_pairs(
             .select("sh")
         )
         shingled = shingled.join(rare, on="sh", how="left_semi")
-    # build-side-only pin (r8) — see minhash_lsh_pairs: probe side keeps
+    # build-side-only pin — see minhash_lsh_pairs: probe side keeps
     # its uniform layout so a hot shingle's expansion parallelizes
     a, b = shingled.alias("a"), pin_shuffle_width(shingled, "sh").alias("b")
     inter = (
@@ -756,11 +767,10 @@ def minhash_near_dups_verified(
     """
     # ONE tokenize+array_distinct pass over the corpus serves BOTH the
     # signature lineage (via word_sets=) and the per-pair attach joins
-    # below (r8 session 3) — before, the LSH stage and the verify stage
-    # each ran their own full text scan + split + distinct. The cache
-    # materializes inside the LSH stage's banded-checkpoint job; the
-    # attach joins then read it instead of re-scanning the corpus. It is
-    # taken only when the caller passes ``persisted`` to release it.
+    # below, instead of one full text scan + split + distinct per stage.
+    # The cache materializes inside the LSH stage's first job; the attach
+    # joins then read it instead of re-scanning the corpus. It is taken
+    # only when the caller passes ``persisted`` to release it.
     words = _cache_for_caller(
         df.select(
             F.col(id_col),
@@ -787,8 +797,8 @@ def minhash_near_dups_verified(
     )
     # |A∪B| = |A| + |B| − |A∩B| for distinct sets, so the union array is
     # never materialized: per candidate pair the verify builds ONE hash
-    # set (array_intersect) instead of two (r8 — this is the per-pair
-    # inner loop over millions of candidates; sizes ride along as ints)
+    # set (array_intersect) instead of two (this is the per-pair inner
+    # loop over millions of candidates; sizes ride along as ints)
     jacc = F.col("__inter") / (F.col("__na") + F.col("__nb") - F.col("__inter"))
     return (
         cand.join(wa, "id_a")

@@ -103,8 +103,9 @@ def test_minhash_signatures_rejects_foreign_word_sets(docs):
 
 
 def test_minhash_without_persisted_leaves_no_cache(spark):
-    """Called without ``persisted``, neither minhash entry point may leave
-    a cached frame behind: nobody would ever release it."""
+    """Called without ``persisted``, neither minhash entry point nor
+    ``ngram_jaccard_pairs`` may leave a cached frame behind: nobody would
+    ever release it. With ``persisted`` the cache is handed to the caller."""
     from colymer_acquirers_spark.operators.dedup import minhash_near_dups_verified
 
     rdds = spark.sparkContext._jsc.getPersistentRDDs
@@ -120,6 +121,16 @@ def test_minhash_without_persisted_leaves_no_cache(spark):
     minhash_lsh_pairs(fresh(1000), "doc_id", "text", 16, 8).collect()
     assert set(rdds().keySet()) - before == set()
     minhash_near_dups_verified(fresh(2000), "doc_id", "text").collect()
+    assert set(rdds().keySet()) - before == set()
+    ngram_jaccard_pairs(fresh(3000), "doc_id", "text", 3, 0.01).collect()
+    assert set(rdds().keySet()) - before == set()
+    cached: list = []
+    ngram_jaccard_pairs(
+        fresh(4000), "doc_id", "text", 3, 0.01, persisted=cached
+    ).collect()
+    assert len(cached) == 1
+    for df in cached:
+        df.unpersist()
     assert set(rdds().keySet()) - before == set()
 
 
@@ -867,3 +878,24 @@ def test_loop_session_width_follows_rows(spark):
     small = loop_session(spark, n_rows=10)
     assert (small.conf.get(wkey), small.conf.get(akey)) == ("1", "false")
     assert (spark.conf.get(wkey), spark.conf.get(akey)) == (width, "true")
+
+
+def test_signatures_spread_one_partition_input(docs):
+    """A corpus that scans as one partition is spread over the session
+    width before the per-word md5s: the signature aggregate runs at width
+    8, and its only exchange on the id is the explicit-width one (the
+    groupBy reuses it instead of adding its own, which AQE would coalesce
+    back to one partition)."""
+    one = docs.coalesce(1)
+    for df in (
+        minhash_signatures(one, "doc_id", "text", 8),
+        simhash64(one, "doc_id", "text"),
+    ):
+        df.write.format("noop").mode("overwrite").save()
+        assert df.rdd.getNumPartitions() == 8
+        final = _plan(df).split("== Initial Plan ==")[0]
+        on_id = [
+            ln for ln in final.splitlines() if "Exchange" in ln and "doc_id" in ln
+        ]
+        assert len(on_id) == 1, final[:2000]
+        assert "REPARTITION_BY_NUM" in on_id[0], on_id[0]
