@@ -37,10 +37,10 @@ def pin_shuffle_width(df: DataFrame, *keys: str) -> DataFrame:
       (measured: verified-minhash 168 s → 12-23 s at sf0.1 after
       pinning);
     - ahead of per-document work that a ``groupBy`` on the same key
-      folds (the per-word md5s of ``minhash_signatures``/``simhash64``):
-      a corpus that scans as one partition is spread over every core,
-      and the aggregate reuses the hash partitioning instead of adding
-      its own exchange."""
+      folds (the per-word md5s of ``minhash_signatures``): a corpus
+      that scans as fewer partitions than cores is spread over every
+      core, and the aggregate reuses the hash partitioning instead of
+      adding its own exchange."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *keys)
 
@@ -92,11 +92,18 @@ def minhash_signatures(
     fewer hashed rows on the documents fixture; natural text repeats
     words at every scale).
 
-    The word-set frame is hash-partitioned on ``id_col`` at the session
-    width before the explode: a corpus that scans as one partition (one
-    small parquet file) would otherwise hash every word in one task. The
-    ``groupBy(id_col)`` reuses that partitioning, so the spread replaces
-    the aggregate's own exchange rather than adding one.
+    When ``df`` has fewer partitions than the session has cores (a
+    corpus that scans as one small parquet file has one), the word-set
+    frame is hash-partitioned on ``id_col`` at the session width before
+    the explode, which would otherwise hash every word in those few
+    tasks. The ``groupBy(id_col)`` reuses that partitioning, so the
+    spread replaces the aggregate's own exchange rather than adding one.
+    An input that already spans the cores keeps the partial aggregate
+    ahead of that exchange, which then ships ``n_hashes`` longs per
+    document instead of its word set. The count is read only from an
+    exchange-free ``df`` (a file scan, maybe filtered), where it runs no
+    job; an input with an exchange or a subquery is always spread, since
+    counting it would run those stages.
 
     ``word_sets`` (optional): a pre-built ``(id_col, __ws)`` frame whose
     ``__ws`` is exactly ``array_distinct(split(text_col, ' '))`` —
@@ -116,9 +123,16 @@ def minhash_signatures(
             F.col(id_col),
             F.array_distinct(F.split(F.col(text_col), " ")).alias("__ws"),
         )
-    words = pin_shuffle_width(word_sets, id_col).select(
-        F.col(id_col), F.explode(F.col("__ws")).alias("w")
-    )
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    if (
+        "Exchange" in plan
+        or "Subquery" in plan
+        or qe.toRdd().getNumPartitions()
+        < df.sparkSession.sparkContext.defaultParallelism
+    ):
+        word_sets = pin_shuffle_width(word_sets, id_col)
+    words = word_sets.select(F.col(id_col), F.explode(F.col("__ws")).alias("w"))
     aggs = [
         F.min(_md5_long(F.concat(F.col("w"), F.lit(f"#{j}")))).alias(f"sig{j}")
         for j in range(n_hashes)
@@ -320,9 +334,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     contributes +1/-1 to its lane; the sign vector packs into one int64.
     All JVM expressions (conv/shift/sum) — no UDF.
     """
-    # spread over the session width before the per-word md5s, as in
-    # minhash_signatures; the lanes groupBy reuses the partitioning
-    words = pin_shuffle_width(df.select(id_col, text_col), id_col).select(
+    words = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("w")
     )
     digest = F.md5(F.col("w").cast("binary"))
@@ -423,7 +435,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
-    persisted: list | None = None,
 ) -> DataFrame:
     """Word-n-gram Jaccard similarity for pairs sharing ≥1 shingle.
 
@@ -440,27 +451,21 @@ def ngram_jaccard_pairs(
     precision, loss for a ≥threshold filter (denominator counts stay
     uncapped). None (default) = exact.
 
-    ``persisted`` (optional out-param, same contract as
-    ``minhash_lsh_pairs``): the shingle set is referenced by the per-doc
-    counts, the DF-cap filter AND both self-join sides, so it is cached
-    and appended for the caller to unpersist; without it nothing is
-    cached and the explode + dedup shuffle runs once per reference.
+    Nothing is cached: the shingle set's explode + dedup shuffle runs
+    once per reference (per-doc counts, DF-cap filter, both self-join
+    sides) rather than leaving a cache behind that nobody releases.
     """
     toks = F.split(F.col(text_col), " ")
     n_sh = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-    shingled = _cache_for_caller(
-        df.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), n_sh),
-                    lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))),
-                )
-            ).alias("sh"),
-        )
-        .dropDuplicates([id_col, "sh"]),
-        persisted,
-    )
+    shingled = df.select(
+        F.col(id_col),
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), n_sh),
+                lambda i: F.xxhash64(F.concat_ws(" ", F.slice(toks, i, n))),
+            )
+        ).alias("sh"),
+    ).dropDuplicates([id_col, "sh"])
     counts = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     if max_doc_freq is not None:
         rare = (

@@ -103,9 +103,9 @@ def test_minhash_signatures_rejects_foreign_word_sets(docs):
 
 
 def test_minhash_without_persisted_leaves_no_cache(spark):
-    """Called without ``persisted``, neither minhash entry point nor
-    ``ngram_jaccard_pairs`` may leave a cached frame behind: nobody would
-    ever release it. With ``persisted`` the cache is handed to the caller."""
+    """Called without ``persisted``, neither minhash entry point may leave
+    a cached frame behind, and ``ngram_jaccard_pairs`` never may: nobody
+    would ever release it."""
     from colymer_acquirers_spark.operators.dedup import minhash_near_dups_verified
 
     rdds = spark.sparkContext._jsc.getPersistentRDDs
@@ -123,14 +123,6 @@ def test_minhash_without_persisted_leaves_no_cache(spark):
     minhash_near_dups_verified(fresh(2000), "doc_id", "text").collect()
     assert set(rdds().keySet()) - before == set()
     ngram_jaccard_pairs(fresh(3000), "doc_id", "text", 3, 0.01).collect()
-    assert set(rdds().keySet()) - before == set()
-    cached: list = []
-    ngram_jaccard_pairs(
-        fresh(4000), "doc_id", "text", 3, 0.01, persisted=cached
-    ).collect()
-    assert len(cached) == 1
-    for df in cached:
-        df.unpersist()
     assert set(rdds().keySet()) - before == set()
 
 
@@ -880,22 +872,35 @@ def test_loop_session_width_follows_rows(spark):
     assert (spark.conf.get(wkey), spark.conf.get(akey)) == (width, "true")
 
 
-def test_signatures_spread_one_partition_input(docs):
-    """A corpus that scans as one partition is spread over the session
-    width before the per-word md5s: the signature aggregate runs at width
-    8, and its only exchange on the id is the explicit-width one (the
+def test_signatures_spread_only_inputs_narrower_than_cores(spark, docs):
+    """The per-word md5s are spread over the session width only when the
+    input has fewer partitions than cores. A one-partition input (one
+    small parquet file scans as one) runs the signature aggregate at width
+    8, and its only exchange on the id is the explicit-width one: the
     groupBy reuses it instead of adding its own, which AQE would coalesce
-    back to one partition)."""
-    one = docs.coalesce(1)
-    for df in (
-        minhash_signatures(one, "doc_id", "text", 8),
-        simhash64(one, "doc_id", "text"),
-    ):
+    back to one partition. An exchange-free input that already spans the
+    cores keeps the parent plan, the partial aggregate ahead of the
+    groupBy's own exchange. An input with an exchange is spread without
+    being counted. Deciding runs no Spark job, and the signatures are the
+    same on every path."""
+    sc = spark.sparkContext
+    wide = sc.parallelize(DOCS, sc.defaultParallelism).toDF(["doc_id", "text"])
+    cases = [
+        (docs.coalesce(1), "REPARTITION_BY_NUM"),
+        (wide, "ENSURE_REQUIREMENTS"),
+        (docs.repartition(1), "REPARTITION_BY_NUM"),
+    ]
+    sigs = []
+    for inp, origin in cases:
+        jobs = set(sc.statusTracker().getJobIdsForGroup())
+        df = minhash_signatures(inp, "doc_id", "text", 8)
+        assert set(sc.statusTracker().getJobIdsForGroup()) == jobs
         df.write.format("noop").mode("overwrite").save()
-        assert df.rdd.getNumPartitions() == 8
+        if origin == "REPARTITION_BY_NUM":
+            assert df.rdd.getNumPartitions() == 8
         final = _plan(df).split("== Initial Plan ==")[0]
-        on_id = [
-            ln for ln in final.splitlines() if "Exchange" in ln and "doc_id" in ln
-        ]
+        on_id = [ln for ln in final.splitlines() if "Exchange" in ln and "doc_id" in ln]
         assert len(on_id) == 1, final[:2000]
-        assert "REPARTITION_BY_NUM" in on_id[0], on_id[0]
+        assert origin in on_id[0], on_id[0]
+        sigs.append(sorted(tuple(r) for r in df.collect()))
+    assert sigs[0] == sigs[1] == sigs[2]
