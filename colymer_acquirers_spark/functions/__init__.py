@@ -5,8 +5,6 @@ from colymer_acquirers_spark.functions.canonical import (  # noqa: F401
     host_of_series,
 )
 from colymer_acquirers_spark.functions.parse import (  # noqa: F401
-    extract_links,
-    extract_links_series,
-    extract_text,
+    extract_links_one,
     extract_text_series,
 )

@@ -7,8 +7,9 @@ generalizes those into one canonical form; the murmur3 of this string is the
 sharding key for the seen-set (north_rule: "salted-hash sharded by
 canonicalized-URL murmur3").
 
-FROZEN CANONICALIZATION SPEC (shared byte-for-byte with the pyref oracle —
-both sides call the same `*_series` pandas implementations):
+FROZEN CANONICALIZATION SPEC. The engine runs it as JVM column
+expressions (``canonicalize_url``, ``host_of``); the pandas ``*_series``
+functions are the oracle that pyref and the parity tests compare against.
 
 1. Only absolute ``http``/``https`` URLs are canonical; anything else → null
    (dropped from the frontier).
@@ -19,9 +20,8 @@ both sides call the same `*_series` pandas implementations):
 5. Query: split on ``&``, empty params dropped, params sorted
    lexicographically, rejoined; empty query → no ``?``.
 
-All implementations are pandas-vectorized (Arrow batches; the only
-per-element Python is the query-param sort, applied to the minority of URLs
-that carry a query string).
+The oracle is pandas-vectorized; its only per-element Python is the
+query-param sort, applied to the minority of URLs that carry a query string.
 """
 
 from __future__ import annotations
@@ -33,8 +33,6 @@ from colymer_acquirers_spark import fragments
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # scheme :// [userinfo@] host [:port] path [?query] [#fragment]
 _URL_RE = (
@@ -85,21 +83,6 @@ def host_of_series(canonical_urls: pd.Series) -> pd.Series:
     """host[:port] component of an already-canonical URL."""
     s = canonical_urls.astype("object")
     return s.str.extract(r"^[a-z]+://([^/]*)")[0]
-
-
-@pandas_udf(T.StringType())
-def _canonicalize_udf(urls: pd.Series) -> pd.Series:
-    return canonicalize_url_series(urls)
-
-
-@pandas_udf(T.StringType())
-def _host_of_udf(urls: pd.Series) -> pd.Series:
-    return host_of_series(urls)
-
-
-def canonicalize_url_pandas(col: Column | str) -> Column:
-    """Arrow-UDF variant (kept for parity testing against the JVM exprs)."""
-    return _canonicalize_udf(F.col(col) if isinstance(col, str) else col)
 
 
 def canonicalize_url(col: Column | str) -> Column:
@@ -165,13 +148,3 @@ def host_of(col: Column | str) -> Column:
 @lru_cache(maxsize=64)
 def _host_of_cached(col: str) -> Column:
     return F.regexp_extract(F.col(col), r"^[a-z]+://([^/]*)", 1)
-
-
-def shard_of(col: Column | str, n_shards: int) -> Column:
-    """Murmur3 shard id of a canonical URL (north_rule salted-hash sharding).
-
-    ``F.hash`` is Murmur3-x86-32 seeded 42 — sharding on the *full* canonical
-    URL (not the host) spreads hot hosts uniformly across shards.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.pmod(F.hash(c), F.lit(n_shards)).cast("int")

@@ -1,4 +1,8 @@
-"""Frozen HTML text/link extraction — Arrow-vectorized pandas UDFs.
+"""Frozen HTML text/link extraction — the pandas oracle.
+
+The crawl engine runs the JVM mirror (``parse_expr.parse_page_expr``);
+pyref, perfbench's checks and the parity tests compare it against these
+plain pandas/Python functions. Nothing here becomes a Spark UDF.
 
 Reference analogs:
 - text extraction: the ``content`` field choice (``colymer/acquirers/
@@ -49,10 +53,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # explicit char class (not \s): Python-re \s is unicode-wide while Java \s is
 # ASCII-only — the frozen rule pins the exact whitespace set so the pandas
@@ -67,7 +67,8 @@ _WS_RE = _WS_CLASS + "+"
 # These SINGLE-PASS semantics are the frozen rule (v2 — see the RULE
 # VERSION NOTE in the module docstring for the v1 delta on overlapping
 # constructs); all three implementations — pandas, JVM, pyref — share
-# this constant.
+# this constant. A fused strip+ws-collapse scan was measured slower
+# (PLANS.md, round-5 parse-path audit).
 _STRIP_ALL_RE = "(?is)" + "|".join(
     [
         r"<script\b.*?</script" + _WS_CLASS + r"*>",
@@ -76,13 +77,6 @@ _STRIP_ALL_RE = "(?is)" + "|".join(
         r"<[^>]*>",
     ]
 )
-# r5 measured dead end, kept for the record (PLANS.md "fused strip+ws"):
-# fusing strip and ws-collapse into one `(?:construct|[ws])+` scan for
-# no-'&' pages is byte-equal but SLOWER in both Java and CPython regex
-# (alternation tried per position + match/append per ws run outweigh the
-# saved pass: 135 vs 107 µs/URL JVM interleaved A/B). "Smart" variants
-# that skip single spaces ([ws]{2,}|non-space-ws) are slower still. The
-# three-pass chain is the measured optimum for this engine.
 
 _HREF_RE = re.compile(
     r"""(?is)<a\b[^>]*?\bhref""" + _WS_CLASS + r"*=" + _WS_CLASS + r"""*(?:"([^"]*)"|'([^']*)')"""
@@ -190,66 +184,3 @@ def extract_links_one(html: str | bytes | None, base_url: str | None) -> list[st
         if j is not None:
             out.append(j)
     return out
-
-
-def extract_links_series(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    """Arrow-batched link extraction: Series[html], Series[url] → Series[list[str]]."""
-    return pd.Series(
-        [extract_links_one(h, u) for h, u in zip(html, base_url)],
-        index=html.index,
-        dtype="object",
-    )
-
-
-@pandas_udf(T.StringType())
-def _extract_text_udf(html: pd.Series) -> pd.Series:
-    return extract_text_series(html)
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def _extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    return extract_links_series(html, base_url)
-
-
-_PARSE_SCHEMA = T.StructType(
-    [
-        T.StructField("content", T.StringType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("links", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-
-@pandas_udf(_PARSE_SCHEMA)
-def _parse_page_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "content": extract_text_series(html),
-            "title": extract_title_series(html),
-            "links": extract_links_series(html, base_url),
-        }
-    )
-
-
-def extract_text(col: Column | str) -> Column:
-    """Spark column: frozen text extraction from html (binary or string)."""
-    return _extract_text_udf(F.col(col) if isinstance(col, str) else col)
-
-
-def extract_links(html: Column | str, base_url: Column | str) -> Column:
-    """Spark column: array<string> of absolutized hrefs in document order."""
-    h = F.col(html) if isinstance(html, str) else html
-    b = F.col(base_url) if isinstance(base_url, str) else base_url
-    return _extract_links_udf(h, b)
-
-
-def parse_page(html: Column | str, base_url: Column | str) -> Column:
-    """struct<content, links> in ONE Arrow round-trip.
-
-    The html column crosses the JVM↔Python boundary exactly once per page —
-    on syscall-expensive hosts (microVM sandboxes) the socket transfer, not
-    the regex work, is the cost that matters.
-    """
-    h = F.col(html) if isinstance(html, str) else html
-    b = F.col(base_url) if isinstance(base_url, str) else base_url
-    return _parse_page_udf(h, b)

@@ -41,12 +41,6 @@ def _vec_lit(values: tuple) -> Column:
 
 @fragments.register
 @lru_cache(maxsize=64)
-def _planes_lit(planes_key: tuple) -> tuple:
-    return tuple(_vec_lit(p) for p in planes_key)
-
-
-@fragments.register
-@lru_cache(maxsize=64)
 def _cents_lit(cents_key: tuple) -> Column:
     return F.array(*[_vec_lit(c) for c in cents_key])
 

@@ -78,16 +78,6 @@ def _warm_parse_exprs(spark: SparkSession) -> None:
         pass
 
 
-OUTPUTS = [
-    "crawl_order",
-    "seen_delta",
-    "articles",
-    "attachments_new",
-    "lineage",
-    "frontier_next",
-]
-
-
 def _round_dir(workdir: str, k: int) -> str:
     return os.path.join(workdir, "rounds", str(k))
 
@@ -110,13 +100,6 @@ def committed_rounds(workdir: str) -> list[int]:
 def read_manifest(workdir: str, k: int) -> dict:
     with open(_manifest_path(workdir, k)) as f:
         return json.load(f)
-
-
-def _read_or_empty(spark: SparkSession, paths: list[str], schema) -> DataFrame:
-    existing = [p for p in paths if os.path.exists(p)]
-    if not existing:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*existing)
 
 
 def read_output(spark: SparkSession, workdir: str, name: str, upto: int | None = None) -> DataFrame:
@@ -352,8 +335,6 @@ def run_crawl(
     workdir: str,
     max_rounds: int = 10,
     default_budget: int = 1_000_000,
-    resume: bool = True,
-    parse_impl: str = "jvm",
     boundary_mode: str = "continue",
     use_bloom: bool = False,
     bloom_filter: "BloomSeen | None" = None,
@@ -363,6 +344,10 @@ def run_crawl(
     reseed: DataFrame | None = None,
 ) -> dict:
     """Run (or resume) up to ``max_rounds`` crawl rounds; returns summary.
+
+    Every call resumes after the workdir's last committed round, and the
+    workdir's state tables (initial seen, compactions, evictions) belong
+    to that one crawl; a fresh crawl takes a new or empty ``workdir``.
 
     Deterministic: same (pages, seeds, politeness, robots, budgets) →
     identical outputs at any parallelism, resumed or not, bloom on or off
@@ -420,10 +405,7 @@ def run_crawl(
 
         robots = compile_robots(robots)
 
-    done = committed_rounds(workdir) if resume else []
-    if not resume and os.path.isdir(os.path.join(workdir, "rounds")):
-        shutil.rmtree(os.path.join(workdir, "rounds"))
-        done = []
+    done = committed_rounds(workdir)
 
     if done:
         last = done[-1]
@@ -440,7 +422,7 @@ def run_crawl(
         frontier = bootstrap_frontier(seeds).persist()
         # the exact bootstrap count is a metric; the loop itself only
         # needs emptiness. metrics_full=False skips the blocking count
-        # job ahead of round 0 (r8; isEmpty touches one partition) —
+        # job ahead of round 0 (isEmpty touches one partition) —
         # later rounds get their counts free from the frontier write's
         # Observation either way.
         frontier_count = (
@@ -500,7 +482,6 @@ def run_crawl(
             rank_offset,
             out_dir=rd,
             default_budget=default_budget,
-            parse_impl=parse_impl,
             boundary_mode=boundary_mode,
             bloom=bloom,
             bloom_filter=bloom_filter,

@@ -14,14 +14,19 @@ host (the fetch-join reuses the canonical_url clustering under AQE).
 
 Driver-job economy: a round runs a fixed, small number of actions — one
 write per output plus the tiny rank-counts collect, ALL submitted to one
-thread pool so their planning/commit driver gaps overlap (round-6 gap audit:
-the serial driver-only share was ~8-9 s/crawl, core-count-independent, the
-Amdahl term behind the N→4N wall-efficiency cap); per-output row counts
-ride ``Observation``s directly above the writes, the optional metrics-only
-counts (candidates / robots-blocked) join the pool as cache-scan jobs, and
-the new-url distinct count runs on the calling thread concurrently — because
-on 10^3-round crawls the per-job fixed cost, not the data, is what dominates
-wall-clock at the small end.
+thread pool so their planning/commit driver gaps overlap (the serial
+driver-only share, measured at ~8-9 s/crawl before pooling, is
+core-count-independent: the Amdahl term behind the N→4N wall-efficiency
+cap); per-output row counts ride ``Observation``s directly above the
+writes, the optional metrics-only counts (candidates / robots-blocked) join
+the pool as cache-scan jobs, and the new-url distinct count runs on the
+calling thread concurrently — because on 10^3-round crawls the per-job
+fixed cost, not the data, is what dominates wall-clock at the small end.
+
+Parse and canonicalization run as JVM column expressions only
+(``parse_expr``, ``envelope_expr``, ``canonical``); html never crosses to
+Python. The pandas functions they mirror are the oracle, not an engine
+path.
 """
 
 from __future__ import annotations
@@ -52,7 +57,6 @@ from colymer_acquirers_spark.functions.envelope_expr import (
     envelope_expr,
     page_content_type_expr,
 )
-from colymer_acquirers_spark.functions.parse import parse_page
 from colymer_acquirers_spark.functions.parse_expr import parse_page_expr
 from colymer_acquirers_spark.operators.politeness import politeness_split, robots_filter
 from colymer_acquirers_spark.operators.ranking import global_rank
@@ -68,16 +72,15 @@ SORT_KEYS = ["priority", "depth", "canonical_url"]
 
 
 @fragments.register
-@functools.lru_cache(maxsize=4)
-def _round_cols(parse_impl: str) -> dict:
+@functools.lru_cache(maxsize=1)
+def _round_cols() -> dict:
     """Plan-invariant Column fragments of a crawl round, built ONCE per
-    session per parse impl. Column objects are immutable unresolved-
+    session. Column objects are immutable unresolved-
     expression wrappers, safe to reuse across DataFrames and rounds;
     rebuilding them every round cost ~2,000 py4j round trips ≈ 1.3-1.8 s of
     zero-running-task driver time per round (perfbench's
     ``plans.round.construct_s``), a core-count-independent Amdahl term at
     any cluster size."""
-    parse_fn = parse_page_expr if parse_impl == "jvm" else parse_page
     return {
         "crawl_order": (
             "rank",
@@ -90,7 +93,7 @@ def _round_cols(parse_impl: str) -> dict:
         "parsed1": (
             "canonical_url", "url", "priority", "depth", "lang", "warc_ts",
             "__round",
-            parse_fn("html", "canonical_url").alias("p"),
+            parse_page_expr("html", "canonical_url").alias("p"),
             envelope_expr("html", "canonical_url").alias("env"),
         ),
         "parsed2": (
@@ -201,7 +204,6 @@ def run_round(
     rank_offset: int,
     out_dir: str,
     default_budget: int = 1_000_000,
-    parse_impl: str = "jvm",
     boundary_mode: str = "continue",
     bloom: DataFrame | None = None,
     bloom_filter: BloomSeen | None = None,
@@ -212,17 +214,13 @@ def run_round(
     """Execute FROZEN SPEC steps 1-9 for round ``rnd`` and write the round's
     outputs (crawl_order, articles, lineage, frontier_next) under out_dir.
 
-    parse_impl: 'jvm' (whole-stage-codegen regexp/HOF expressions — default;
-    html never leaves the JVM) or 'arrow' (pandas UDF, one Arrow round-trip
-    per page). Both implement the same FROZEN RULES, byte-equal by test.
-
     metrics_full=False skips the metrics-only jobs (candidate/robots/new-url
     counts become -1); results are unchanged.
 
     A cross-round overlap was measured neutral: OPTIMIZATION_r08.md.
     """
     _t = time.monotonic()
-    C = _round_cols(parse_impl)
+    C = _round_cols()
     if n_frontier is None:
         n_frontier = frontier.count()
 
@@ -287,7 +285,7 @@ def run_round(
     # driver action here; the fetched total + per-partition counts come
     # from rank_info.resolve(), submitted to the write pool below so its
     # one small job overlaps the output writes instead of serializing a
-    # ~14-job AQE cascade ahead of them (round-6 gap audit).
+    # ~14-job AQE cascade ahead of them.
     ranked, rank_info = global_rank(
         fetched, SORT_KEYS, "rank", start=rank_offset, return_info=True
     )
@@ -300,10 +298,9 @@ def run_round(
     # to ONE pool PROGRESSIVELY, each as soon as its frame is constructed:
     # Spark interleaves their tasks (filling executor slots one sequential
     # job would idle), each job's 0.6-0.9 s driver-only planning/commit gap
-    # hides behind the others' execution, and — the round-7 gap finding —
-    # the remaining py4j plan-construction time for the LATER outputs
-    # overlaps the EARLIER writes' execution instead of serializing ahead
-    # of all of them. Safe without phases: every shared intermediate
+    # hides behind the others' execution, and the remaining py4j
+    # plan-construction time for the LATER outputs overlaps the EARLIER
+    # writes' execution instead of serializing ahead of all of them. Safe without phases: every shared intermediate
     # (candidates, the politeness-ranked chain, fetched, the rank
     # intermediate, parsed, links) is persisted, and Spark's block-level
     # cache locking makes a concurrent consumer block on an in-progress
@@ -355,10 +352,8 @@ def run_round(
             how="left",
         )
     )
-    # 7. parse: content + links + envelope in one pass over html (JVM exprs
-    # by default; parse_impl='arrow' moves content/title/links to a single
-    # Arrow round-trip while the envelope stays JVM-side); html is dropped
-    # before the cache so it is never buffered twice
+    # 7. parse: content + links + envelope in one pass over html, all JVM
+    # exprs; html is dropped before the cache so it is never buffered twice
     parsed = (
         joined.filter(C["html_notnull"])
         .select(*C["parsed1"])

@@ -2290,7 +2290,7 @@ def oracle_sql() -> dict[str, str]:
 # the pyref oracle covers it in tests; not single-statement-SQL-expressible)
 # ---------------------------------------------------------------------------
 
-# Rounds are committed (manifest-last) and ``run_crawl(resume=True)`` skips
+# Rounds are committed (manifest-last) and ``run_crawl`` always skips
 # committed rounds entirely, so a STABLE workdir path makes the flagship
 # crawl a cross-entry, cross-process cache: the articles, crawl_order and
 # attachments entries all read the same one crawl run instead of re-crawling

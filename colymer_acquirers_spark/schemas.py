@@ -168,19 +168,3 @@ LINEAGE = T.StructType(
         T.StructField("dst_url", T.StringType(), False),
     ]
 )
-
-# -- metrics: per-round per-partition counters (reference analog: request
-#    logging site.py:39, entry counters twitter.py:131,143) ------------------
-METRICS = T.StructType(
-    [
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("candidates", T.LongType(), False),
-        T.StructField("deduped", T.LongType(), False),
-        T.StructField("blocked_robots", T.LongType(), False),
-        T.StructField("fetched", T.LongType(), False),
-        T.StructField("throttled", T.LongType(), False),
-        T.StructField("fetch_miss", T.LongType(), False),
-        T.StructField("parsed", T.LongType(), False),
-        T.StructField("new_urls", T.LongType(), False),
-    ]
-)

@@ -3,5 +3,4 @@ from colymer_acquirers_spark.sources.synth import (  # noqa: F401
     synth_politeness,
     synth_robots,
     synth_seeds,
-    write_synth_web,
 )

@@ -250,11 +250,3 @@ def synth_robots(spark: SparkSession) -> DataFrame:
         F.lit(True).alias("allow"),
     )
     return deny.unionByName(allow)
-
-
-def write_synth_web(spark: SparkSession, out_dir: str, n: int, n_seeds: int = 8) -> None:
-    """Materialize pages/seeds/politeness/robots as parquet under out_dir."""
-    synth_pages(spark, n).write.mode("overwrite").parquet(f"{out_dir}/pages.parquet")
-    synth_seeds(spark, n_seeds).write.mode("overwrite").parquet(f"{out_dir}/seeds.parquet")
-    synth_politeness(spark).write.mode("overwrite").parquet(f"{out_dir}/politeness.parquet")
-    synth_robots(spark).write.mode("overwrite").parquet(f"{out_dir}/robots.parquet")

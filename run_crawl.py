@@ -35,16 +35,16 @@ def main() -> int:
     ap.add_argument("--robots", help="robots parquet path (optional)")
     ap.add_argument("--synth", type=int, metavar="N",
                     help="generate an N-page synthetic web instead of --pages/--seeds")
-    ap.add_argument("--workdir", required=True, help="checkpoint dir (resumable)")
+    ap.add_argument("--workdir", required=True,
+                    help="checkpoint dir: resumed if it holds committed "
+                         "rounds; a fresh crawl takes a new or empty dir")
     ap.add_argument("--rounds", type=int, default=10)
     ap.add_argument("--default-budget", type=int, default=1_000_000)
     ap.add_argument("--master", default=None, help="override spark master")
-    ap.add_argument("--fresh", action="store_true", help="ignore existing checkpoints")
     ap.add_argument("--boundary-mode", choices=["continue", "break"], default="continue")
     ap.add_argument("--use-bloom", action="store_true",
                     help="prefilter the seen-set anti-join with a "
                          "probabilistic shard tier")
-    ap.add_argument("--parse-impl", choices=["jvm", "arrow"], default="jvm")
     ap.add_argument("--fast-metrics", action="store_true",
                     help="skip metrics-only count jobs")
     ap.add_argument("--compact-every", type=int, default=8,
@@ -96,9 +96,8 @@ def main() -> int:
     summary = run_crawl(
         spark, pages, seeds, politeness, robots, args.workdir,
         max_rounds=args.rounds, default_budget=args.default_budget,
-        resume=not args.fresh, boundary_mode=args.boundary_mode,
+        boundary_mode=args.boundary_mode,
         use_bloom=args.use_bloom,
-        parse_impl=args.parse_impl,
         metrics_full=not args.fast_metrics,
         compact_every=args.compact_every,
         reseed=reseed,

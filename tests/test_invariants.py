@@ -177,6 +177,34 @@ def test_flagship_cache_key_covers_crawl_semantic_modules():
     assert must_have <= got, sorted(must_have - got)
 
 
+def test_functions_define_no_python_udfs():
+    """One engine implementation per function: ``functions/`` holds the
+    JVM column expressions the engine runs and the plain pandas oracle
+    they are compared against, never a Spark Python UDF (whose Arrow batch
+    boundary the engine must not pay per page)."""
+    import ast
+    import pathlib
+
+    import colymer_acquirers_spark.functions as fns
+
+    found = []
+    for path in sorted(pathlib.Path(fns.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            names = []
+            if isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+            found += [
+                f"{path.name}:{node.lineno}: {n}"
+                for n in names
+                if n in ("pandas_udf", "udf")
+            ]
+    assert not found, found
+
+
 def test_cache_key_scanner_sees_all_import_styles(tmp_path, monkeypatch):
     """The ast scanner resolves dotted, parenthesized-dotless, and
     relative imports (the two styles the regex scanner missed)."""
@@ -208,7 +236,7 @@ def test_fragment_caches_cleared_on_new_gateway(spark):
     from colymer_acquirers_spark.plans.round import _round_cols
 
     assert fragments._CACHES, "no fragment caches registered"
-    _round_cols("jvm")  # populate at least one cache
+    _round_cols()  # populate at least one cache
     assert _round_cols.cache_info().currsize > 0
 
     before = fragments._GATEWAY_ID
@@ -242,7 +270,7 @@ def test_fragment_caches_survive_session_restart_and_round_runs(tmp_path):
             synth_pages, synth_politeness, synth_robots, synth_seeds)
 
         s1 = get_spark(app_name="gw1", master="local[2]", shuffle_partitions=4)
-        _round_cols("jvm")
+        _round_cols()
         assert _round_cols.cache_info().currsize > 0
         gw = fragments._GATEWAY_ID
         s1.stop()

@@ -1,7 +1,8 @@
-"""north_rule deployment path: ``spark-submit --py-files <pkg.zip>
-run_crawl.py`` must run a resumable crawl with ONLY the zipped package on
-the python path (the multi-executor-cluster ship shape; reference analog:
-``python scan.py <site>``, scan.py:77-124)."""
+"""north_rule deployment path: ``run_crawl.py`` must run a resumable crawl
+from the command line. Two launchers: ``spark-submit --py-files <pkg.zip>``
+with ONLY the zipped package on the python path (the multi-executor-cluster
+ship shape; reference analog: ``python scan.py <site>``, scan.py:77-124),
+and plain ``python run_crawl.py`` from the repo checkout."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import json
 import os
 import shutil
 import subprocess
+import sys
 import zipfile
 
 import duckdb
@@ -17,6 +19,25 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
+CRAWL_ARGS = ["--synth", "150", "--fast-metrics"]
+
+
+def _assert_committed_rounds(wd: str, n: int) -> None:
+    """``n`` committed rounds with contiguous global ranks from 0, readable
+    without Spark."""
+    manifests = sorted(glob.glob(os.path.join(wd, "rounds", "*", "manifest.json")))
+    assert len(manifests) == n, manifests
+    for m in manifests:
+        assert json.load(open(m)).get("round") is not None
+    orders = glob.glob(os.path.join(wd, "rounds", "*", "crawl_order", "*.parquet"))
+    assert orders
+    ranks = [
+        row[0]
+        for row in duckdb.sql(
+            f"SELECT rank FROM read_parquet({orders!r}) ORDER BY rank"
+        ).fetchall()
+    ]
+    assert ranks == list(range(len(ranks))) and len(ranks) > 0
 
 
 @pytest.mark.skipif(
@@ -45,24 +66,34 @@ def test_spark_submit_py_files_crawl(tmp_path):
     r = subprocess.run(
         [
             SPARK_SUBMIT, "--master", "local[2]", "--py-files", zip_path,
-            str(stage / "run_crawl.py"), "--synth", "150",
-            "--workdir", wd, "--rounds", "2", "--fast-metrics",
+            str(stage / "run_crawl.py"), *CRAWL_ARGS,
+            "--workdir", wd, "--rounds", "2",
         ],
         cwd=str(stage), env=env, capture_output=True, text=True, timeout=420,
     )
     assert r.returncode == 0, (r.stdout[-1500:], r.stderr[-1500:])
+    _assert_committed_rounds(wd, 2)
 
-    # committed rounds with monotone global ranks, readable without Spark
-    manifests = sorted(glob.glob(os.path.join(wd, "rounds", "*", "manifest.json")))
-    assert len(manifests) == 2, manifests
-    for m in manifests:
-        assert json.load(open(m)).get("round") is not None
-    orders = glob.glob(os.path.join(wd, "rounds", "*", "crawl_order", "*.parquet"))
-    assert orders
-    ranks = [
-        row[0]
-        for row in duckdb.sql(
-            f"SELECT rank FROM read_parquet({orders!r}) ORDER BY rank"
-        ).fetchall()
-    ]
-    assert ranks == list(range(len(ranks))) and len(ranks) > 0
+
+def test_python_run_crawl_cli_resumes(tmp_path):
+    """``python run_crawl.py`` from the repo: a second call on the same
+    workdir resumes after the committed round (every run resumes; a fresh
+    crawl takes a new workdir)."""
+    wd = str(tmp_path / "wd")
+
+    def cli(rounds: int) -> dict:
+        r = subprocess.run(
+            [
+                sys.executable, os.path.join(REPO, "run_crawl.py"), *CRAWL_ARGS,
+                "--master", "local[2]", "--workdir", wd,
+                "--rounds", str(rounds),
+            ],
+            cwd=str(tmp_path), capture_output=True, text=True, timeout=420,
+        )
+        assert r.returncode == 0, (r.stdout[-1500:], r.stderr[-1500:])
+        return json.loads(r.stdout.strip().splitlines()[-1])
+
+    assert cli(1)["rounds"] == [0]
+    _assert_committed_rounds(wd, 1)
+    assert cli(2)["rounds"] == [0, 1]
+    _assert_committed_rounds(wd, 2)
