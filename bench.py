@@ -120,7 +120,7 @@ def _crawl_bench(spark) -> tuple[float, int, float]:
     t0 = time.monotonic()
     summary = run_crawl(
         spark, pages, seeds, politeness, robots, workdir,
-        max_rounds=CRAWL_ROUNDS, metrics_full=False,
+        max_rounds=CRAWL_ROUNDS,
     )
     wall = time.monotonic() - t0
     cpu = _jvm_cpu_seconds() - cpu0

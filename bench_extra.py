@@ -1,14 +1,12 @@
 #!/usr/bin/env python
 """Catalog-leaf measurement harness (bench.py is FROZEN — this file holds
-the extra instrumentation: per-leaf timings, plans, one traced crawl).
+the extra instrumentation: per-leaf timings and plans).
 
 Modes:
   python bench_extra.py queries [name ...]   # time each catalog query with a
                                              # noop sink (guide §1.4), N reps
   python bench_extra.py explain [name ...]   # write explain("formatted") to
                                              # plans/r08/<name>_<tag>.txt
-  python bench_extra.py crawl               # one crawl (bench workload) with
-                                             # SPARK_GRAFT_TRACE honoring env
 
 Env:
   SPARK_GRAFT_SF_DIR (default: the sf0.1 test data, see SF_DIR),
@@ -92,13 +90,6 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(txt)
             print(f"wrote {path} ({len(txt)} bytes)")
-        return
-    if mode == "crawl":
-        import importlib
-
-        bench = importlib.import_module("bench")
-        wall, urls, cpu = bench._crawl_bench(spark)
-        print(json.dumps({"wall": round(wall, 3), "urls": urls, "cpu": round(cpu, 1)}))
         return
     # queries mode
     results: dict[str, list[float]] = {}

@@ -6,10 +6,11 @@ Reference analog: the attachment descriptor built in 7 places
 the reference either; it carries bytes + metadata (width/height/duration/
 bitrate). Here the Spark-side plumbing is real — schema, partitioning,
 Arrow-batched ``mapInPandas`` signatures, batch shapes — and the codec
-dispatch carries ONE real format: uncompressed 24/32-bit BI_RGB BMP,
-decoded in pure numpy (``decode_bmp``), with real pixel statistics
-(mean pixel value, 16-bin intensity histogram). Every other format in
-this container (no PIL/libvips/ffmpeg) falls back to the clearly-marked
+dispatch carries TWO real formats: uncompressed 24/32-bit BI_RGB BMP
+(``decode_bmp``) and 8-bit truecolor PNG (``decode_png``, stdlib zlib
+plus numpy row unfiltering), both with real pixel statistics (mean pixel
+value, 16-bin intensity histogram). Every other format (there is no
+PIL/libvips/ffmpeg dependency) falls back to the clearly-marked
 DETERMINISTIC FAKE (byte-stat features) that exercises the identical
 dataflow.
 """
@@ -550,15 +551,14 @@ def _fake_image_features(batch: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def extract_image_features(
-    media: DataFrame, decode: str = "fake", batch_hint: int | None = None
-) -> DataFrame:
+def extract_image_features(media: DataFrame, decode: str = "fake") -> DataFrame:
     """Arrow-batched feature extraction over image rows (mapInPandas).
 
-    decode='real' decodes BMP payloads in pure numpy (``decode_bmp``) and
-    emits true pixel statistics — decoded width/height, mean pixel value,
-    16-bin intensity histogram; non-BMP payloads (no JPEG/PNG codec libs
-    in this container) fall back to the deterministic byte-stat fake.
+    decode='real' decodes BMP and 8-bit truecolor PNG payloads in pure
+    numpy (``decode_bmp``, ``decode_png``) and emits true pixel statistics
+    — decoded width/height, mean pixel value, 16-bin intensity histogram;
+    every other payload (JPEG, paletted/interlaced PNG, RLE BMP, truncated
+    data) falls back to the deterministic byte-stat fake.
     decode='fake' runs the fake for everything.
     """
     if decode not in ("real", "fake"):

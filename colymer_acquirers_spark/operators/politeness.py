@@ -88,8 +88,9 @@ def robots_filter(
     politeness chain, and when concurrent jobs co-materialize a cache via
     block locking, each job's observation accumulator sees only the
     partitions that job computed itself (a PARTIAL count). Observations are
-    only exact directly above a terminal action. Callers count the blocked
-    branch with a normal job against the cached ``candidates`` input.
+    only exact directly above a terminal action. Callers derive the blocked
+    count from a count of the cached ``candidates`` input minus the rows
+    that pass.
 
     ``robots`` may be pre-compiled with ``compile_robots`` (one
     array<struct> row per host, column ``__rules``) — loop callers compile

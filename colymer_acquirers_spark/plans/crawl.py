@@ -7,8 +7,9 @@ at round granularity: each round writes its five outputs under
 ``rounds/K/…`` and commits by writing ``manifest.json`` *last* — a crash
 before the manifest leaves an uncommitted round that resume simply
 recomputes. Rounds are strictly functional (no wall-clock, no randomness in
-the round path), so a resumed run reproduces identical ordering — the Z4
-property the resume test pins.
+what a round computes; the manifest's ``phases_s`` timings only report),
+so a resumed run reproduces identical ordering — the Z4 property the
+resume test pins.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,7 +26,6 @@ from colymer_acquirers_spark import schemas
 from colymer_acquirers_spark.operators.seen import compact_seen
 from colymer_acquirers_spark.operators.seen_bloom import TARGET_FPR, BloomSeen
 from colymer_acquirers_spark.plans.round import (
-    _trace,
     bootstrap_frontier,
     keyed_pages,
     run_round,
@@ -339,7 +340,6 @@ def run_crawl(
     use_bloom: bool = False,
     bloom_filter: "BloomSeen | None" = None,
     initial_seen: DataFrame | None = None,
-    metrics_full: bool = True,
     compact_every: int = 8,
     reseed: DataFrame | None = None,
 ) -> dict:
@@ -353,6 +353,13 @@ def run_crawl(
     identical outputs at any parallelism, resumed or not, bloom on or off
     (the bloom is a prefilter with an exact backstop — never changes
     results, only the amount of exact anti-join work).
+
+    Each round's ``manifest.json`` holds its exact ``metrics`` (the
+    deterministic counts, equal to ``pyref.crawl``'s) and, beside them,
+    ``phases_s``: driver wall seconds for plan construction, the pooled
+    writes, the metrics gather and the bloom build. Seen/pinned
+    compaction runs after the manifest commits, so its time is not in
+    any manifest.
 
     Each round writes its accumulated bloom as a committed table under
     ``rounds/K/bloom``. A bloom that is missing or uncommitted on resume
@@ -420,16 +427,9 @@ def run_crawl(
         rank_offset = 0
         start_round = 0
         frontier = bootstrap_frontier(seeds).persist()
-        # the exact bootstrap count is a metric; the loop itself only
-        # needs emptiness. metrics_full=False skips the blocking count
-        # job ahead of round 0 (isEmpty touches one partition) —
-        # later rounds get their counts free from the frontier write's
-        # Observation either way.
-        frontier_count = (
-            frontier.count()
-            if metrics_full
-            else (0 if frontier.isEmpty() else -1)
-        )
+        # one count job on a fresh crawl; later rounds get the count from
+        # the frontier_next write's Observation
+        frontier_count = frontier.count()
 
     if reseed is not None:
         # re-crawl injection (pairs with evict_seen): merge extra seeds into
@@ -485,10 +485,10 @@ def run_crawl(
             boundary_mode=boundary_mode,
             bloom=bloom,
             bloom_filter=bloom_filter,
-            metrics_full=metrics_full,
             n_frontier=frontier_count,
             pinned_prior=pinned_prior,
         )
+        t_bloom = time.monotonic()
         if use_bloom:
             # accumulate: OR-merge previous bloom with this round's delta;
             # the round-0 bloom must also cover any pre-existing seen state,
@@ -508,9 +508,7 @@ def run_crawl(
             delta = bloom_filter.build_delta(delta_src)
             acc = delta if bloom is None else bloom_filter.merge(bloom.unionByName(delta))
             write_table(acc, os.path.join(rd, "bloom"), mode="overwrite")
-        import time as _time
-
-        _tb = _time.monotonic()
+        phases_s = dict(rr.phases_s, bloom=round(time.monotonic() - t_bloom, 3))
         frontier = spark.read.schema(schemas.FRONTIER).parquet(
             os.path.join(rd, "frontier_next")
         )
@@ -521,12 +519,11 @@ def run_crawl(
         # commit marker LAST (atomic at the filesystem-rename granularity)
         tmp = _manifest_path(workdir, rnd) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"round": rnd, "rank_offset_next": rank_offset, "metrics": metrics}, f)
+            json.dump({"round": rnd, "rank_offset_next": rank_offset,
+                       "metrics": metrics, "phases_s": phases_s}, f)
         os.replace(tmp, _manifest_path(workdir, rnd))
-        _tb = _trace(f"round{rnd} commit+reread", _tb)
         for df in rr.persisted:
             df.unpersist()
-        _trace(f"round{rnd} unpersist", _tb)
         # seen compaction every K committed rounds (reference analog: block
         # splicing, acquirer.py:46-58): rewrite base ∪ deltas into one
         # table so per-round seen reads stay O(compact_every), not O(R)

@@ -17,11 +17,14 @@ write per output plus the tiny rank-counts collect, ALL submitted to one
 thread pool so their planning/commit driver gaps overlap (the serial
 driver-only share, measured at ~8-9 s/crawl before pooling, is
 core-count-independent: the Amdahl term behind the N→4N wall-efficiency
-cap); per-output row counts ride ``Observation``s directly above the
-writes, the optional metrics-only counts (candidates / robots-blocked) join
-the pool as cache-scan jobs, and the new-url distinct count runs on the
-calling thread concurrently — because on 10^3-round crawls the per-job
-fixed cost, not the data, is what dominates wall-clock at the small end.
+cap) — because on 10^3-round crawls the per-job fixed cost, not the data,
+is what dominates wall-clock at the small end. The manifest counts ride
+those jobs: ``Observation``s directly above the articles and
+attachments_new writes, three on the frontier_next write (carryover rows,
+boundary-deferred rows, and the merged frontier's size with its new-url
+count), and the fetched total from ``rank_info``. The only count job is
+``candidates.count()``, a pooled cache scan that runs only when robots
+rules are given (robots-blocked = candidates − fetched − carryover).
 
 Parse and canonicalization run as JVM column expressions only
 (``parse_expr``, ``envelope_expr``, ``canonical``); html never crosses to
@@ -31,22 +34,11 @@ path.
 
 from __future__ import annotations
 
-import os
 import functools
+import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-
-# SPARK_GRAFT_TRACE=1 → print driver-side phase timings (plan construction
-# vs pooled execution vs bookkeeping) per round
-_TRACE = os.environ.get("SPARK_GRAFT_TRACE", "") == "1"
-
-
-def _trace(label: str, t0: float) -> float:
-    t1 = time.monotonic()
-    if _TRACE:
-        print(f"[trace] {label}: {(t1 - t0)*1000:.0f} ms", flush=True)
-    return t1
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -147,12 +139,15 @@ def _round_cols() -> dict:
             F.col("priority"),
             (F.col("depth") + 1).cast("int").alias("depth"),
             (F.col("__round") + 1).cast("int").alias("discovered_round"),
+            F.lit(True).alias("__new"),
         ),
-        "frontier_cols": (
+        "held_cols": (
             "canonical_url", "url", "priority", "depth", "discovered_round",
+            F.lit(False).alias("__new"),
         ),
         "host": host_of("canonical_url"),
         "n": F.count(F.lit(1)).alias("n"),
+        "n_new": F.count_if(F.col("__new")).alias("new"),
     }
 
 
@@ -161,6 +156,7 @@ class RoundResult:
     seen_delta: DataFrame  # lazy; used for the bloom delta build
     metrics: dict
     persisted: list  # round-local cached DataFrames; unpersist after commit
+    phases_s: dict  # driver wall seconds: construct, writes, metrics
 
 
 def bootstrap_frontier(seeds: DataFrame) -> DataFrame:
@@ -203,46 +199,36 @@ def run_round(
     rnd: int,
     rank_offset: int,
     out_dir: str,
+    n_frontier: int,
     default_budget: int = 1_000_000,
     boundary_mode: str = "continue",
     bloom: DataFrame | None = None,
     bloom_filter: BloomSeen | None = None,
-    metrics_full: bool = True,
-    n_frontier: int | None = None,
     pinned_prior: DataFrame | None = None,
 ) -> RoundResult:
     """Execute FROZEN SPEC steps 1-9 for round ``rnd`` and write the round's
     outputs (crawl_order, articles, lineage, frontier_next) under out_dir.
-
-    metrics_full=False skips the metrics-only jobs (candidate/robots/new-url
-    counts become -1); results are unchanged.
+    ``n_frontier`` is the input frontier's row count (the caller has it
+    from the previous round's frontier_next Observation).
 
     A cross-round overlap was measured neutral: OPTIMIZATION_r08.md.
     """
-    _t = time.monotonic()
+    t_start = time.monotonic()
     C = _round_cols()
-    if n_frontier is None:
-        n_frontier = frontier.count()
 
     # 1. dedup against seen: exact tier, optionally bloom-prefiltered
     # ('continue' mode), or the 'break' boundary variant (P9)
-    # Metric-only counts (candidates / robots-blocked / new-url) do NOT run
-    # here as eager jobs — each pre-write action serializes the whole
-    # upstream materialization into a driver-gap-ridden AQE job cascade
-    # (perfbench's ``spark.idle_core_share``). They run as pooled jobs
-    # CONCURRENT with the output writes below, reading the same persisted
-    # frames (cache block locking keeps co-materialization exactly-once,
-    # and a count job is exact no matter which job computed the cache —
-    # unlike an Observation under a cache, whose accumulator would only
-    # see the partitions its own job computed).
+    # No count runs here as an eager job: each pre-write action serializes
+    # the whole upstream materialization into a driver-gap-ridden AQE job
+    # cascade (perfbench's ``spark.idle_core_share``). The counts come from
+    # Observations on the writes below, each on a frame only its own write
+    # reads — an Observation under a shared cache would see only the
+    # partitions its own job computed.
     boundary_deferred = None
-    n_deferred = 0
     extra_persisted: list[DataFrame] = []
     if boundary_mode == "break":
         candidates, boundary_deferred = boundary_break_split(frontier, seen)
         candidates = candidates.persist()
-        boundary_deferred = boundary_deferred.persist()
-        n_deferred = boundary_deferred.count()
     elif bloom is not None and bloom_filter is not None and seen is not None:
         probed = bloom_filter.probe(frontier, bloom).persist()
         extra_persisted.append(probed)
@@ -252,10 +238,9 @@ def run_round(
         candidates = unseen.unionByName(dedup_against_seen(maybe, seen)).persist()
     else:
         candidates = dedup_against_seen(frontier, seen).persist()
-    _t = _trace(f"round{rnd} construct:candidates", _t)
 
     # 2. robots gate
-    allowed, blocked = robots_filter(candidates, robots)
+    allowed, _ = robots_filter(candidates, robots)
 
     # 3. politeness budget split (ranked intermediate cached so the
     # join+window chain runs once, not once per split half)
@@ -273,12 +258,10 @@ def run_round(
     # the codegen cache (sized in session.py) makes rounds 1..R compile
     # nothing new — JIT cost becomes O(1) in the number of rounds, on a
     # real cluster as on this box.
-    _t = _trace(f"round{rnd} construct:politeness-split", _t)
     round_df = frontier.sparkSession.createDataFrame(
         [(rnd,)], schema="__round int"
     )
     fetched = fetched.crossJoin(F.broadcast(round_df)).persist()
-    _t = _trace(f"round{rnd} construct:round-df", _t)
 
     # 4. deterministic global order (scalable rank, not a single window).
     # The rank offsets are a LAZY subplan (operators/ranking.py) — no
@@ -318,14 +301,12 @@ def run_round(
         )
         write_table(df, os.path.join(out_dir, name), mode="overwrite")
 
-    _t = _trace(f"round{rnd} construct:rank", _t)
     fs = [
         pool.submit(_write, crawl_order, "crawl_order"),
         # the rank-offset counts collect: one small job over the (by then
         # cached) rank intermediate, overlapped with the writes
         pool.submit(rank_info.resolve),
     ]
-    _t = _trace(f"round{rnd} submit:crawl_order", _t)
 
     # 5. seen delta (not written — identical to crawl_order's url column)
     seen_delta = fetched.select("canonical_url")
@@ -359,7 +340,6 @@ def run_round(
         .select(*C["parsed1"])
         .select(*C["parsed2"])
     )
-    _t = _trace(f"round{rnd} construct:parsed", _t)
     # full article envelope (schemas.ARTICLES; reference envelope
     # weibo.py:215-231, twitter.py:86-103): author/time/content_type/
     # version/raw passthrough/attachments, FROZEN ENVELOPE RULES; crawl
@@ -407,18 +387,26 @@ def run_round(
     # the next round's input — and attachments_new) are submitted before
     # articles/lineage, so FIFO gives the critical-path job first claim
     # on freed slots while the post-parse tail backfills.
-    nxt = carryover.select(*C["frontier_cols"]).unionByName(new_cands)
+    # Carryover and boundary-deferred rows feed only this write, so their
+    # Observations are exact; ``__new`` marks rows from new_cands, and
+    # max(__new) per merged url counts the distinct new urls.
+    obs_carry = Observation()
+    nxt = carryover.select(*C["held_cols"]).observe(obs_carry, C["n"])
+    nxt = nxt.unionByName(new_cands)
+    obs_deferred = None
     if boundary_deferred is not None:
-        nxt = nxt.unionByName(boundary_deferred.select(*C["frontier_cols"]))
-    frontier_next = merge_frontier(nxt).withColumn("host", C["host"])
-    obs_frontier = Observation()
-    fs.append(
-        pool.submit(
-            _write_after,
-            frontier_next.observe(obs_frontier, C["n"]),
-            "frontier_next",
+        obs_deferred = Observation()
+        nxt = nxt.unionByName(
+            boundary_deferred.select(*C["held_cols"]).observe(obs_deferred, C["n"])
         )
+    obs_frontier = Observation()
+    frontier_next = (
+        merge_frontier(nxt, flag="__new")
+        .withColumn("host", C["host"])
+        .observe(obs_frontier, C["n"], C["n_new"])
+        .drop("__new")
     )
+    fs.append(pool.submit(_write_after, frontier_next, "frontier_next"))
     # P7: pinned-entry-once state — each attachment (keyed by id = md5 of
     # its absolute url; all other columns are functions of the url) enters
     # attachments_new exactly once across the whole crawl (reference:
@@ -438,7 +426,6 @@ def run_round(
             _write_after, atts_new.observe(obs_atts, C["n"]), "attachments_new"
         )
     )
-    _t = _trace(f"round{rnd} submit:frontier+atts", _t)
     fs.append(
         pool.submit(
             _write_after, articles.observe(obs_articles, C["n"]), "articles"
@@ -448,63 +435,51 @@ def run_round(
         ["src_url", "dst_url"]
     )
     fs.append(pool.submit(_write_after, lineage, "lineage"))
-    _t = _trace(f"round{rnd} plan-construct+submit", _t)
 
-    # metric-only count jobs join the same barrier: they read the persisted
-    # frames the writes are materializing anyway, so they cost cache scans,
-    # not recomputation, and their driver gaps hide behind the writes
-    f_cand = pool.submit(candidates.count) if metrics_full else None
-    f_blocked = (
-        pool.submit(blocked.count)
-        if (metrics_full and robots is not None)
-        else None
-    )
-    if metrics_full:
-        # this count plans against the links cache on the calling thread —
-        # it must not plan before the cache entry exists (see _write_after)
-        parse_cached.result()
-        n_new = new_cands.select("canonical_url").distinct().count()
-    else:
-        n_new = -1
+    # the one count job, needed only when robots rules can block: a scan
+    # of the candidates cache the writes fill. Counting the blocked rows
+    # instead re-runs the robots verdict and measured ~12% slower per
+    # recrawl round.
+    f_cand = pool.submit(candidates.count) if robots is not None else None
+    t_submitted = time.monotonic()
     for f in fs:
         f.result()
     pool.shutdown(wait=True)
-    _t = _trace(f"round{rnd} pooled-writes", _t)
+    t_written = time.monotonic()
     n_fetched = rank_info.total
     n_parsed = obs_articles.get["n"]
-    n_miss = n_fetched - n_parsed
-    n_new_atts = obs_atts.get["n"]
-    n_candidates = f_cand.result() if metrics_full else -1
-    n_blocked = (
-        0 if robots is None else (f_blocked.result() if metrics_full else -1)
-    )
-    n_carryover = (
-        n_candidates - max(n_blocked, 0) - n_fetched if metrics_full else -1
-    )
+    n_carryover = obs_carry.get["n"]
+    n_deferred = obs_deferred.get["n"] if obs_deferred is not None else 0
+    n_allowed = n_fetched + n_carryover
+    n_candidates = f_cand.result() if f_cand is not None else n_allowed
+    frontier_counts = obs_frontier.get
 
     metrics = {
         "round": rnd,
         "candidates": n_candidates,
-        "deduped": n_frontier - n_candidates - n_deferred if metrics_full else -1,
-        "blocked_robots": n_blocked,
+        "deduped": n_frontier - n_candidates - n_deferred,
+        "blocked_robots": n_candidates - n_allowed,
         "fetched": n_fetched,
-        "throttled": n_carryover + n_deferred if metrics_full else -1,
-        "fetch_miss": n_miss,
+        "throttled": n_carryover + n_deferred,
+        "fetch_miss": n_fetched - n_parsed,
         "parsed": n_parsed,
-        "new_urls": n_new,
-        "new_attachments": n_new_atts,
-        "frontier_next_count": obs_frontier.get["n"],
+        "new_urls": frontier_counts["new"],
+        "new_attachments": obs_atts.get["n"],
+        "frontier_next_count": frontier_counts["n"],
         # per-partition fetch counts (north_rule: per-partition metrics),
         # recorded from the rank-offset pass at zero extra cost
         "fetched_by_partition": {
             str(k): v for k, v in rank_info.partition_counts.items()
         },
     }
-    _trace(f"round{rnd} metrics-gather", _t)
+    t_end = time.monotonic()
     return RoundResult(
         seen_delta=seen_delta,
         metrics=metrics,
-        persisted=[candidates, fetched, parsed, links]
-        + ([boundary_deferred] if boundary_deferred is not None else [])
-        + extra_persisted,
+        persisted=[candidates, fetched, parsed, links] + extra_persisted,
+        phases_s={
+            "construct": round(t_submitted - t_start, 3),
+            "writes": round(t_written - t_submitted, 3),
+            "metrics": round(t_end - t_written, 3),
+        },
     )

@@ -45,8 +45,6 @@ def main() -> int:
     ap.add_argument("--use-bloom", action="store_true",
                     help="prefilter the seen-set anti-join with a "
                          "probabilistic shard tier")
-    ap.add_argument("--fast-metrics", action="store_true",
-                    help="skip metrics-only count jobs")
     ap.add_argument("--compact-every", type=int, default=8,
                     help="compact seen/pinned state every K rounds (0=never)")
     ap.add_argument("--round-seconds", type=float, default=None,
@@ -98,7 +96,6 @@ def main() -> int:
         max_rounds=args.rounds, default_budget=args.default_budget,
         boundary_mode=args.boundary_mode,
         use_bloom=args.use_bloom,
-        metrics_full=not args.fast_metrics,
         compact_every=args.compact_every,
         reseed=reseed,
     )

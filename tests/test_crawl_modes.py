@@ -14,7 +14,11 @@ from pyspark.sql import functions as F
 
 from colymer_acquirers_spark import pyref
 from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
-from colymer_acquirers_spark.plans.crawl import read_output, run_crawl
+from colymer_acquirers_spark.plans.crawl import (
+    committed_rounds,
+    read_output,
+    run_crawl,
+)
 from colymer_acquirers_spark.sources.synth import (
     synth_pages,
     synth_politeness,
@@ -194,3 +198,58 @@ def test_compaction_identical_and_bounded_reads(spark, web, tmp_path_factory):
     run_crawl(spark, pages, seeds, pol, rob, wd_res, max_rounds=ROUNDS,
               compact_every=1)
     pd.testing.assert_frame_equal(_order(spark, wd_none), _order(spark, wd_res))
+
+
+@pytest.mark.parametrize(
+    "mode",
+    [
+        # the recrawl shape: bloom prefilter, compaction every round, and a
+        # second run_crawl call resuming after round 0
+        pytest.param(
+            dict(use_bloom=True, compact_every=1, resume_after=1), id="bloom-resume"
+        ),
+        pytest.param(dict(boundary_mode="break"), id="break"),
+        pytest.param(dict(no_robots=True), id="no-robots"),
+    ],
+)
+def test_manifest_metrics_match_pyref(spark, web, tmp_path_factory, mode):
+    """Every round's manifest holds exact counts (no -1 anywhere) equal to
+    pyref's for every metric key, in each crawl configuration, plus the
+    driver phase timings beside them."""
+    import json
+    import os
+
+    pages, seeds, pol, rob = web
+    mode = dict(mode)
+    resume_after = mode.pop("resume_after", None)
+    no_robots = mode.pop("no_robots", False)
+    pre = pages.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 0).select(
+        F.col("url").alias("canonical_url")
+    )
+    rob_pd = rob.toPandas()
+    golden = pyref.crawl(
+        pages.toPandas(), seeds.toPandas(), pol.toPandas(),
+        rob_pd.iloc[:0] if no_robots else rob_pd,
+        max_rounds=ROUNDS, boundary_mode=mode.get("boundary_mode", "continue"),
+        initial_seen=set(pre.toPandas()["canonical_url"]),
+    )
+    wd = str(tmp_path_factory.mktemp("metrics"))
+    robots = None if no_robots else rob
+    for rounds in ([resume_after] if resume_after else []) + [ROUNDS]:
+        run_crawl(
+            spark, pages, seeds, pol, robots, wd, max_rounds=rounds,
+            initial_seen=pre, **mode,
+        )
+    assert committed_rounds(wd) == list(range(len(golden.metrics)))
+    manifests = []
+    for k in committed_rounds(wd):
+        with open(os.path.join(wd, "rounds", str(k), "manifest.json")) as f:
+            manifests.append(json.load(f))
+    for ref_m, man in zip(golden.metrics, manifests):
+        em = man["metrics"]
+        for key in ref_m:
+            assert em[key] == ref_m[key], (em["round"], key, em[key], ref_m[key])
+        counts = [v for v in em.values() if isinstance(v, int)]
+        counts += list(em["fetched_by_partition"].values())
+        assert min(counts) >= 0, em
+        assert set(man["phases_s"]) == {"construct", "writes", "metrics", "bloom"}

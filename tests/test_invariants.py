@@ -177,18 +177,30 @@ def test_flagship_cache_key_covers_crawl_semantic_modules():
     assert must_have <= got, sorted(must_have - got)
 
 
-def test_functions_define_no_python_udfs():
-    """One engine implementation per function: ``functions/`` holds the
-    JVM column expressions the engine runs and the plain pandas oracle
-    they are compared against, never a Spark Python UDF (whose Arrow batch
-    boundary the engine must not pay per page)."""
+@pytest.mark.parametrize(
+    "subpackage, forbidden",
+    [
+        # one engine implementation per function: ``functions/`` holds the
+        # JVM column expressions the engine runs and the plain pandas
+        # oracle they are compared against, never a Spark Python UDF
+        # (whose Arrow batch boundary the engine must not pay per page)
+        pytest.param("functions", ("pandas_udf", "udf"), id="functions"),
+        # the crawl plans report through the manifest, not through
+        # ``print`` lines, and no env flag changes what they do
+        pytest.param("plans", ("print", "environ", "getenv"), id="plans"),
+    ],
+)
+def test_subpackage_uses_no_forbidden_names(subpackage, forbidden):
+    """No module of the subpackage names a forbidden function or
+    attribute (as a name, an attribute or an import)."""
     import ast
     import pathlib
 
-    import colymer_acquirers_spark.functions as fns
+    import colymer_acquirers_spark as pkg
 
     found = []
-    for path in sorted(pathlib.Path(fns.__file__).parent.glob("*.py")):
+    root = pathlib.Path(pkg.__file__).parent / subpackage
+    for path in sorted(root.glob("*.py")):
         for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
             names = []
             if isinstance(node, ast.Name):
@@ -200,7 +212,7 @@ def test_functions_define_no_python_udfs():
             found += [
                 f"{path.name}:{node.lineno}: {n}"
                 for n in names
-                if n in ("pandas_udf", "udf")
+                if n in forbidden
             ]
     assert not found, found
 

@@ -19,7 +19,7 @@ import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
-CRAWL_ARGS = ["--synth", "150", "--fast-metrics"]
+CRAWL_ARGS = ["--synth", "150"]
 
 
 def _assert_committed_rounds(wd: str, n: int) -> None:
