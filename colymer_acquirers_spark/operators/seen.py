@@ -76,21 +76,14 @@ def boundary_break_split(
     return candidates, deferred
 
 
-def merge_frontier(df: DataFrame, flag: str | None = None) -> DataFrame:
+def merge_frontier(df: DataFrame) -> DataFrame:
     """Per canonical_url keep the tuple-min candidate (FROZEN SPEC step 9).
 
     Lexicographic min over (priority, depth, url, discovered_round) — struct
-    min in Spark matches Python tuple min for these types. A boolean
-    ``flag`` column is kept as its OR over the merged rows.
+    min in Spark matches Python tuple min for these types.
     """
     agg, sel = _merge_fragments()
-    if flag is None:
-        return df.groupBy("canonical_url").agg(agg).select("canonical_url", *sel)
-    return (
-        df.groupBy("canonical_url")
-        .agg(agg, F.max(flag).alias(flag))
-        .select("canonical_url", *sel, flag)
-    )
+    return df.groupBy("canonical_url").agg(agg).select("canonical_url", *sel)
 
 
 @fragments.register

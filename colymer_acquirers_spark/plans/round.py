@@ -19,12 +19,13 @@ driver-only share, measured at ~8-9 s/crawl before pooling, is
 core-count-independent: the Amdahl term behind the N→4N wall-efficiency
 cap) — because on 10^3-round crawls the per-job fixed cost, not the data,
 is what dominates wall-clock at the small end. The manifest counts ride
-those jobs: ``Observation``s directly above the articles and
-attachments_new writes, three on the frontier_next write (carryover rows,
-boundary-deferred rows, and the merged frontier's size with its new-url
-count), and the fetched total from ``rank_info``. The only count job is
-``candidates.count()``, a pooled cache scan that runs only when robots
-rules are given (robots-blocked = candidates − fetched − carryover).
+those jobs: one ``Observation`` directly above each of the articles,
+attachments_new and frontier_next writes (the last counts the merged
+frontier, its new urls, and the carryover and boundary-deferred rows from
+a per-url OR of source bits), and the fetched total from ``rank_info``.
+The only count job is ``candidates.count()``, a pooled cache scan that
+runs only when robots rules are given (robots-blocked = candidates −
+fetched − carryover).
 
 Parse and canonicalization run as JVM column expressions only
 (``parse_expr``, ``envelope_expr``, ``canonical``); html never crosses to
@@ -53,6 +54,7 @@ from colymer_acquirers_spark.functions.parse_expr import parse_page_expr
 from colymer_acquirers_spark.operators.politeness import politeness_split, robots_filter
 from colymer_acquirers_spark.operators.ranking import global_rank
 from colymer_acquirers_spark.operators.seen import (
+    _merge_fragments,
     boundary_break_split,
     dedup_against_seen,
     merge_frontier,
@@ -61,6 +63,9 @@ from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
 from colymer_acquirers_spark.sources.tables import write_table
 
 SORT_KEYS = ["priority", "depth", "canonical_url"]
+FRONTIER_COLS = ("canonical_url", "url", "priority", "depth", "discovered_round")
+# ``__src`` bits: which step-9 input a next-frontier row came from
+SRC_NEW, SRC_CARRY, SRC_DEFERRED = 1, 2, 4
 
 
 @fragments.register
@@ -139,15 +144,22 @@ def _round_cols() -> dict:
             F.col("priority"),
             (F.col("depth") + 1).cast("int").alias("depth"),
             (F.col("__round") + 1).cast("int").alias("discovered_round"),
-            F.lit(True).alias("__new"),
+            F.lit(SRC_NEW).alias("__src"),
         ),
-        "held_cols": (
-            "canonical_url", "url", "priority", "depth", "discovered_round",
-            F.lit(False).alias("__new"),
-        ),
+        "carry_cols": (*FRONTIER_COLS, F.lit(SRC_CARRY).alias("__src")),
+        "deferred_cols": (*FRONTIER_COLS, F.lit(SRC_DEFERRED).alias("__src")),
+        "src_or": F.bit_or("__src").alias("__src"),
         "host": host_of("canonical_url"),
         "n": F.count(F.lit(1)).alias("n"),
-        "n_new": F.count_if(F.col("__new")).alias("new"),
+        "frontier_counts": (
+            F.count(F.lit(1)).alias("n"),
+            *(
+                F.count_if(F.col("__src").bitwiseAND(bit) != 0).alias(name)
+                for name, bit in (
+                    ("new", SRC_NEW), ("carry", SRC_CARRY), ("deferred", SRC_DEFERRED)
+                )
+            ),
+        ),
     }
 
 
@@ -221,9 +233,10 @@ def run_round(
     # No count runs here as an eager job: each pre-write action serializes
     # the whole upstream materialization into a driver-gap-ridden AQE job
     # cascade (perfbench's ``spark.idle_core_share``). The counts come from
-    # Observations on the writes below, each on a frame only its own write
-    # reads — an Observation under a shared cache would see only the
-    # partitions its own job computed.
+    # Observations directly above the writes below: one under a shared
+    # cache would see only the partitions its own job computed, and one
+    # under a shuffle can lose its fields to an AQE-pruned empty stage or
+    # double-count a resubmitted map stage.
     boundary_deferred = None
     extra_persisted: list[DataFrame] = []
     if boundary_mode == "break":
@@ -387,24 +400,22 @@ def run_round(
     # the next round's input — and attachments_new) are submitted before
     # articles/lineage, so FIFO gives the critical-path job first claim
     # on freed slots while the post-parse tail backfills.
-    # Carryover and boundary-deferred rows feed only this write, so their
-    # Observations are exact; ``__new`` marks rows from new_cands, and
-    # max(__new) per merged url counts the distinct new urls.
-    obs_carry = Observation()
-    nxt = carryover.select(*C["held_cols"]).observe(obs_carry, C["n"])
-    nxt = nxt.unionByName(new_cands)
-    obs_deferred = None
+    # Each row carries its source as a bit in ``__src`` and the merge ORs
+    # them per url, so the one Observation directly above this write
+    # counts the merged frontier, its distinct new urls, and the carryover
+    # and deferred rows (both are frontier subsets: unique, disjoint urls).
+    nxt = carryover.select(*C["carry_cols"]).unionByName(new_cands)
     if boundary_deferred is not None:
-        obs_deferred = Observation()
-        nxt = nxt.unionByName(
-            boundary_deferred.select(*C["held_cols"]).observe(obs_deferred, C["n"])
-        )
+        nxt = nxt.unionByName(boundary_deferred.select(*C["deferred_cols"]))
+    merge_agg, merge_sel = _merge_fragments()
     obs_frontier = Observation()
     frontier_next = (
-        merge_frontier(nxt, flag="__new")
+        nxt.groupBy("canonical_url")
+        .agg(merge_agg, C["src_or"])
+        .select("canonical_url", *merge_sel, "__src")
         .withColumn("host", C["host"])
-        .observe(obs_frontier, C["n"], C["n_new"])
-        .drop("__new")
+        .observe(obs_frontier, *C["frontier_counts"])
+        .drop("__src")
     )
     fs.append(pool.submit(_write_after, frontier_next, "frontier_next"))
     # P7: pinned-entry-once state — each attachment (keyed by id = md5 of
@@ -448,11 +459,11 @@ def run_round(
     t_written = time.monotonic()
     n_fetched = rank_info.total
     n_parsed = obs_articles.get["n"]
-    n_carryover = obs_carry.get["n"]
-    n_deferred = obs_deferred.get["n"] if obs_deferred is not None else 0
+    frontier_counts = obs_frontier.get
+    n_carryover = frontier_counts["carry"]
+    n_deferred = frontier_counts["deferred"]
     n_allowed = n_fetched + n_carryover
     n_candidates = f_cand.result() if f_cand is not None else n_allowed
-    frontier_counts = obs_frontier.get
 
     metrics = {
         "round": rnd,

@@ -200,6 +200,26 @@ def test_compaction_identical_and_bounded_reads(spark, web, tmp_path_factory):
     pd.testing.assert_frame_equal(_order(spark, wd_none), _order(spark, wd_res))
 
 
+def _assert_manifests_match(wd, golden):
+    """Every committed manifest's metrics equal pyref's round by round, with
+    no negative count anywhere and the driver phase timings beside them."""
+    import json
+    import os
+
+    assert committed_rounds(wd) == list(range(len(golden.metrics)))
+    for ref_m in golden.metrics:
+        path = os.path.join(wd, "rounds", str(ref_m["round"]), "manifest.json")
+        with open(path) as f:
+            man = json.load(f)
+        em = man["metrics"]
+        for key in ref_m:
+            assert em[key] == ref_m[key], (em["round"], key, em[key], ref_m[key])
+        counts = [v for v in em.values() if isinstance(v, int)]
+        counts += list(em["fetched_by_partition"].values())
+        assert min(counts) >= 0, em
+        assert set(man["phases_s"]) == {"construct", "writes", "metrics", "bloom"}
+
+
 @pytest.mark.parametrize(
     "mode",
     [
@@ -216,9 +236,6 @@ def test_manifest_metrics_match_pyref(spark, web, tmp_path_factory, mode):
     """Every round's manifest holds exact counts (no -1 anywhere) equal to
     pyref's for every metric key, in each crawl configuration, plus the
     driver phase timings beside them."""
-    import json
-    import os
-
     pages, seeds, pol, rob = web
     mode = dict(mode)
     resume_after = mode.pop("resume_after", None)
@@ -240,16 +257,21 @@ def test_manifest_metrics_match_pyref(spark, web, tmp_path_factory, mode):
             spark, pages, seeds, pol, robots, wd, max_rounds=rounds,
             initial_seen=pre, **mode,
         )
-    assert committed_rounds(wd) == list(range(len(golden.metrics)))
-    manifests = []
-    for k in committed_rounds(wd):
-        with open(os.path.join(wd, "rounds", str(k), "manifest.json")) as f:
-            manifests.append(json.load(f))
-    for ref_m, man in zip(golden.metrics, manifests):
-        em = man["metrics"]
-        for key in ref_m:
-            assert em[key] == ref_m[key], (em["round"], key, em[key], ref_m[key])
-        counts = [v for v in em.values() if isinstance(v, int)]
-        counts += list(em["fetched_by_partition"].values())
-        assert min(counts) >= 0, em
-        assert set(man["phases_s"]) == {"construct", "writes", "metrics", "bloom"}
+    _assert_manifests_match(wd, golden)
+
+
+def test_manifest_metrics_match_pyref_until_frontier_empty(spark, tmp_path_factory):
+    """A small web crawled until no frontier is left: the last rounds merge
+    (nearly) empty inputs, and their manifests must still equal pyref's."""
+    pages, seeds = synth_pages(spark, 40), synth_seeds(spark, 5)
+    pol, rob = synth_politeness(spark), synth_robots(spark)
+    max_rounds = 20
+    golden = pyref.crawl(
+        pages.toPandas(), seeds.toPandas(), pol.toPandas(), rob.toPandas(),
+        max_rounds=max_rounds,
+    )
+    assert len(golden.metrics) < max_rounds  # the frontier runs out first
+    wd = str(tmp_path_factory.mktemp("until_empty"))
+    res = run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=max_rounds)
+    _assert_manifests_match(wd, golden)
+    assert res["metrics"][-1]["frontier_next_count"] == 0
