@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 PATH_RE = r"^[a-z]+://[^/]*(/.*)$"
 SORT_KEYS = ["priority", "depth", "canonical_url"]
+SKEW_SALT = 16  # phase-1 groups per host in politeness_split
 
 # Plan-invariant Column/WindowSpec fragments are memoized module-wide:
 # Column objects are immutable unresolved-expression wrappers, safe to reuse
@@ -142,7 +143,6 @@ def politeness_split(
     allowed: DataFrame,
     politeness: DataFrame | None,
     default_budget: int = 1_000_000,
-    skew_salt: int = 16,
     persisted: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split allowed candidates into (fetched, carryover) per FROZEN SPEC
@@ -153,13 +153,13 @@ def politeness_split(
     Skew-safe two-phase top-k (SURVEY.md §7.4 hard part 5): a hot host (the
     fixture puts ~30%% of URLs on one host) would serialize a plain
     per-host window into one giant task. Phase 1 ranks within
-    (host, salt=murmur3(canonical_url) mod S) groups — parallel even inside
-    one host — and any row ranked > budget *locally* is already > budget
-    globally, so it goes straight to carryover. Phase 2 ranks the ≤ S·budget
-    survivors per host exactly. The fetched set is identical to the
+    (host, salt=murmur3(canonical_url) mod SKEW_SALT) groups — parallel
+    even inside one host — and any row ranked > budget *locally* is already
+    > budget globally, so it goes straight to carryover. Phase 2 ranks the
+    ≤ SKEW_SALT·budget survivors per host exactly. The fetched set is identical to the
     single-window result (exactness property of two-phase top-k).
     """
-    frag = _split_fragments(int(default_budget), int(skew_salt))
+    frag = _split_fragments(int(default_budget))
     if politeness is not None:
         j = allowed.join(
             F.broadcast(politeness.select("host", "max_fetch_per_round")),
@@ -170,18 +170,10 @@ def politeness_split(
         j = allowed.withColumn("max_fetch_per_round", frag["null_budget"])
     j = j.withColumn("__b", frag["b"])
     drop_cols = ["__rn", "__b", "max_fetch_per_round", "__salt", "__lrn"]
-
-    def _clean(df: DataFrame) -> DataFrame:
-        return df.drop(*[c for c in drop_cols if c in df.columns])
-
-    if skew_salt > 1:
-        j = j.withColumn("__salt", frag["salt"])
-        j = j.withColumn("__lrn", frag["lrn"])
-        survivors = j.filter(frag["lrn_keep"])
-        pruned = j.filter(frag["lrn_prune"])
-    else:
-        survivors = j
-        pruned = None
+    j = j.withColumn("__salt", frag["salt"])
+    j = j.withColumn("__lrn", frag["lrn"])
+    survivors = j.filter(frag["lrn_keep"])
+    pruned = j.filter(frag["lrn_prune"])
 
     ranked = survivors.withColumn("__rn", frag["rn"])
     if persisted is not None:
@@ -190,25 +182,27 @@ def politeness_split(
         # half (the caller owns the unpersist after its terminal actions)
         ranked = ranked.persist()
         persisted.append(ranked)
-    fetched = _clean(ranked.filter(frag["rn_keep"]))
-    carryover = _clean(ranked.filter(frag["rn_carry"]))
-    if pruned is not None:
-        carryover = carryover.unionByName(_clean(pruned))
+    fetched = ranked.filter(frag["rn_keep"]).drop(*drop_cols)
+    carryover = (
+        ranked.filter(frag["rn_carry"])
+        .drop(*drop_cols)
+        .unionByName(pruned.drop(*drop_cols))
+    )
     return fetched, carryover
 
 
 @fragments.register
 @lru_cache(maxsize=8)
-def _split_fragments(default_budget: int, skew_salt: int) -> dict:
+def _split_fragments(default_budget: int) -> dict:
     """Plan-invariant Column fragments of politeness_split, built once per
-    (default_budget, skew_salt) — see module note on py4j round trips."""
+    default_budget — see module note on py4j round trips."""
     order = [F.col(k).asc() for k in SORT_KEYS]
     w1 = Window.partitionBy("host", "__salt").orderBy(*order)
     w2 = Window.partitionBy("host").orderBy(*order)
     return {
         "null_budget": F.lit(None).cast("int"),
         "b": F.coalesce(F.col("max_fetch_per_round"), F.lit(default_budget)),
-        "salt": F.pmod(F.hash(F.col("canonical_url")), F.lit(skew_salt)),
+        "salt": F.pmod(F.hash(F.col("canonical_url")), F.lit(SKEW_SALT)),
         "lrn": F.row_number().over(w1),
         "lrn_keep": F.col("__lrn") <= F.col("__b"),
         "lrn_prune": F.col("__lrn") > F.col("__b"),

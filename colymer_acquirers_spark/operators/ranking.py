@@ -20,7 +20,7 @@ writes, which already overlap in a thread pool.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, Window
@@ -65,35 +65,16 @@ class RankInfo:
     ``counts_df`` is the tiny lazy ``(partition id, count)`` frame the
     offsets derive from. ``resolve()`` collects it (one cheap job over the
     cached intermediate — submit it to the caller's write pool so it
-    overlaps the output jobs) and fills ``total`` / ``partition_counts``;
-    both raise until resolved.
+    overlaps the output jobs) and returns the per-partition row counts in
+    partition-id order.
     """
 
     counts_df: DataFrame
     persisted: DataFrame
-    _total: int | None = field(default=None, repr=False)
-    _partition_counts: dict[int, int] | None = field(default=None, repr=False)
 
-    def resolve(self) -> "RankInfo":
-        if self._total is None:
-            counts = {
-                r[_PID]: r["__rank_cnt"] for r in self.counts_df.collect()
-            }
-            self._partition_counts = {p: counts[p] for p in sorted(counts)}
-            self._total = sum(counts.values())
-        return self
-
-    @property
-    def total(self) -> int:
-        if self._total is None:
-            raise RuntimeError("RankInfo not resolved; call resolve() first")
-        return self._total
-
-    @property
-    def partition_counts(self) -> dict[int, int]:
-        if self._partition_counts is None:
-            raise RuntimeError("RankInfo not resolved; call resolve() first")
-        return self._partition_counts
+    def resolve(self) -> dict[int, int]:
+        counts = {r[_PID]: r["__rank_cnt"] for r in self.counts_df.collect()}
+        return {p: counts[p] for p in sorted(counts)}
 
 
 def global_rank(
@@ -101,7 +82,6 @@ def global_rank(
     keys: list[str],
     rank_col: str = "rank",
     start: int = 0,
-    num_partitions: int | None = None,
     return_info: bool = False,
 ):
     """Attach ``rank_col`` = start, start+1, ... in (keys) ascending order.
@@ -110,16 +90,15 @@ def global_rank(
     parallelism-independent ranks; the crawl sort_key includes the unique
     canonical_url, satisfying this.
 
-    return_info=True → (df, RankInfo): the row total + per-partition counts
-    fall out of the offset subplan (RankInfo.resolve() collects the tiny
+    return_info=True → (df, RankInfo): the per-partition row counts fall
+    out of the offset subplan (RankInfo.resolve() collects the tiny
     counts frame — cheap once the cached intermediate is materialized by
     the caller's first action), and the cached intermediate is handed to
     the caller for lifecycle management instead of leaking one persisted
     DataFrame per call.
     """
     spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     frag = _rank_fragments(tuple(keys))
     ranged = df.repartitionByRange(num_partitions, *frag["keys"])
     ranged = ranged.withColumn(_PID, frag["pid"])

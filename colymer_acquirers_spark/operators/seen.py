@@ -4,7 +4,8 @@ Reference analog: the chain-block interval seen-set / min_id dedup boundary
 (``colymer/acquirers/acquirer.py:10-22,46``) plus the store's id-keyed
 idempotent insert (``colymer/sites/colymer.py:25-31``). The exact tier is a
 left-anti join — the truth; the bloom tier (`seen_bloom.py`) is a prefilter
-optimization layered in front of it (no false drops ever).
+optimization layered in front of it (no false drops ever). A crawl round
+runs these only on a frontier that can hold seen urls (``plans/round.py``).
 
 Storage model: append-only per-round deltas (``rounds/K/seen_delta``), the
 analog of the reference's checkpoint-after-every-page (``acquirer.py:71-74``).
@@ -22,21 +23,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_against_seen(frontier: DataFrame, seen: DataFrame | None) -> DataFrame:
+def dedup_against_seen(frontier: DataFrame, seen: DataFrame) -> DataFrame:
     """Drop frontier rows whose canonical_url is already seen (exact).
 
     The 'continue' boundary form (SURVEY.md §2.2 P9, twitter.py:145-147):
     seen rows drop, everything else proceeds this round.
     """
-    if seen is None:
-        return frontier
     return frontier.join(
         seen.select("canonical_url"), on="canonical_url", how="left_anti"
     )
 
 
 def boundary_break_split(
-    frontier: DataFrame, seen: DataFrame | None
+    frontier: DataFrame, seen: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """The 'break' boundary form (P9, weibo.py:311-313, instagram.py:65-67):
     per host, walk frontier rows in sort_key order; the FIRST seen row stops
@@ -53,8 +52,6 @@ def boundary_break_split(
     skew-join splitting handles a hot host.
 
     Returns (candidates, boundary_deferred)."""
-    if seen is None:
-        return frontier, frontier.limit(0)
     flagged = frontier.join(
         seen.select("canonical_url").withColumn("__seen", F.lit(True)),
         on="canonical_url",

@@ -23,9 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colymer_acquirers_spark import schemas
-from colymer_acquirers_spark.operators.seen import compact_seen
+from colymer_acquirers_spark.functions.canonical import host_of
+from colymer_acquirers_spark.operators.seen import compact_seen, merge_frontier
 from colymer_acquirers_spark.operators.seen_bloom import TARGET_FPR, BloomSeen
 from colymer_acquirers_spark.plans.round import (
+    FRONTIER_COLS,
     bootstrap_frontier,
     keyed_pages,
     run_round,
@@ -354,6 +356,19 @@ def run_crawl(
     (the bloom is a prefilter with an exact backstop — never changes
     results, only the amount of exact anti-join work).
 
+    Step 1 (the seen check) runs only in the call's first round, and only
+    when that frontier can hold seen urls: the call built it from
+    ``seeds`` (no committed round yet), merged ``reseed`` urls into it, or
+    wrote ``initial_seen`` for the first time. Every other round starts
+    from the frontier_next the round before wrote, and step 9 made that
+    disjoint from seen. A resumed call makes the same choice with no
+    stored record: a frontier_next(K) row is unseen in ``read_seen(K)``
+    when written, and nothing outside a call grows seen except a first
+    ``initial_seen`` write (``evict_seen`` only removes urls; compaction
+    keeps the set). So the bloom is probed only when such a first round
+    comes after round 0, which has no bloom yet: in practice, a reseed
+    call's.
+
     Each round's ``manifest.json`` holds its exact ``metrics`` (the
     deterministic counts, equal to ``pyref.crawl``'s) and, beside them,
     ``phases_s``: driver wall seconds for plan construction, the pooled
@@ -389,7 +404,10 @@ def run_crawl(
     # pre-existing seen state (reference analog: chain blocks from a prior
     # scan, acquirer.py:21-22); persisted once so resume sees the same state
     seen_base_path = os.path.join(workdir, "initial_seen")
-    if initial_seen is not None and not os.path.exists(seen_base_path):
+    wrote_seen_base = initial_seen is not None and not os.path.exists(
+        seen_base_path
+    )
+    if wrote_seen_base:
         initial_seen.select("canonical_url").write.mode("overwrite").parquet(
             seen_base_path
         )
@@ -426,28 +444,26 @@ def run_crawl(
     else:
         rank_offset = 0
         start_round = 0
-        frontier = bootstrap_frontier(seeds).persist()
-        # one count job on a fresh crawl; later rounds get the count from
-        # the frontier_next write's Observation
-        frontier_count = frontier.count()
+        frontier = bootstrap_frontier(seeds)
 
     if reseed is not None:
         # re-crawl injection (pairs with evict_seen): merge extra seeds into
         # the current frontier. Idempotent under crash-resume: urls already
         # re-fetched are back in seen, so the in-round dedup drops them
-        cols = ["canonical_url", "url", "priority", "depth", "discovered_round"]
-        from colymer_acquirers_spark.functions.canonical import host_of as _hof
-        from colymer_acquirers_spark.operators.seen import merge_frontier
-
-        frontier = (
-            merge_frontier(
-                frontier.select(*cols).unionByName(
-                    bootstrap_frontier(reseed).select(*cols)
-                )
+        frontier = merge_frontier(
+            frontier.select(*FRONTIER_COLS).unionByName(
+                bootstrap_frontier(reseed).select(*FRONTIER_COLS)
             )
-            .withColumn("host", _hof("canonical_url"))
-            .persist()
-        )
+        ).withColumn("host", host_of("canonical_url"))
+
+    # step 1 runs in the call's first round only, and only when its
+    # frontier can hold seen urls (see the docstring)
+    seed_built = not done or reseed is not None
+    check_seen = seed_built or wrote_seen_base
+    if seed_built:
+        # one count job per seed-built frontier; later rounds get the
+        # count from the frontier_next write's Observation
+        frontier = frontier.persist()
         frontier_count = frontier.count()
 
     all_metrics = [read_manifest(workdir, k)["metrics"] for k in done]
@@ -486,8 +502,10 @@ def run_crawl(
             bloom=bloom,
             bloom_filter=bloom_filter,
             n_frontier=frontier_count,
+            check_seen=check_seen and seen is not None,
             pinned_prior=pinned_prior,
         )
+        check_seen = False
         t_bloom = time.monotonic()
         if use_bloom:
             # accumulate: OR-merge previous bloom with this round's delta;
@@ -509,6 +527,8 @@ def run_crawl(
             acc = delta if bloom is None else bloom_filter.merge(bloom.unionByName(delta))
             write_table(acc, os.path.join(rd, "bloom"), mode="overwrite")
         phases_s = dict(rr.phases_s, bloom=round(time.monotonic() - t_bloom, 3))
+        # frees a seed-built frontier; a no-op on a frontier_next read
+        frontier.unpersist()
         frontier = spark.read.schema(schemas.FRONTIER).parquet(
             os.path.join(rd, "frontier_next")
         )
@@ -554,6 +574,7 @@ def run_crawl(
                     )
 
     pages_k.unpersist()
+    frontier.unpersist()  # a seed-built frontier that no round consumed
     return {
         "rounds": committed_rounds(workdir),
         "rank_total": rank_offset,

@@ -6,11 +6,17 @@ Reference analog: one trip through ``Acquirer.scan``'s inner loop
 chain boundary, parse, extend the block — generalized so one *round* handles
 the whole frontier in bulk:
 
-    frontier ─ dedup(seen) ─ robots ─ politeness-window ─⋈ pages ─ parse
-             └→ crawl_order / articles / lineage / seen Δ / next frontier
+    frontier ─ [dedup(seen)] ─ robots ─ politeness-window ─⋈ pages ─ parse
+             └→ crawl_order / articles / lineage / seen Δ / next frontier ▷ seen
 
-Only two shuffles dominate: the anti-join on canonical_url and the window on
-host (the fetch-join reuses the canonical_url clustering under AQE).
+Step 8's anti-join of the new links against seen ∪ this round's fetches is
+the seen check that finds something every round. Step 1's ``[dedup(seen)]``
+runs only when the caller passes ``check_seen``: a frontier built from
+seeds or reseeds can hold seen urls, but one the previous round wrote
+cannot (step 9 dropped them), so checking it again finds nothing.
+
+Two shuffles dominate: step 8's anti-join on canonical_url and the window
+on host (the fetch-join reuses the canonical_url clustering under AQE).
 
 Driver-job economy: a round runs a fixed, small number of actions — one
 write per output plus the tiny rank-counts collect, ALL submitted to one
@@ -18,14 +24,17 @@ thread pool so their planning/commit driver gaps overlap (the serial
 driver-only share, measured at ~8-9 s/crawl before pooling, is
 core-count-independent: the Amdahl term behind the N→4N wall-efficiency
 cap) — because on 10^3-round crawls the per-job fixed cost, not the data,
-is what dominates wall-clock at the small end. The manifest counts ride
-those jobs: one ``Observation`` directly above each of the articles,
-attachments_new and frontier_next writes (the last counts the merged
-frontier, its new urls, and the carryover and boundary-deferred rows from
-a per-url OR of source bits), and the fetched total from ``rank_info``.
-The only count job is ``candidates.count()``, a pooled cache scan that
-runs only when robots rules are given (robots-blocked = candidates −
-fetched − carryover).
+is what dominates wall-clock at the small end. Each pooled task runs
+under its own job description (``round{K}:write:{output}`` for the
+writes) and clears it when done. The manifest counts ride those jobs:
+one ``Observation`` directly above each of the articles, attachments_new
+and frontier_next writes (the last counts the merged frontier, its new
+urls, and the carryover and boundary-deferred rows from a per-url OR of
+source bits), and the fetched total from ``rank_info``. The only count
+job is ``candidates.count()``, a pooled cache scan that runs only in a
+round that checks seen (robots-blocked = candidates − fetched −
+carryover); without the check, candidates is the frontier, whose count
+the caller already has.
 
 Parse and canonicalization run as JVM column expressions only
 (``parse_expr``, ``envelope_expr``, ``canonical``); html never crosses to
@@ -163,6 +172,17 @@ def _round_cols() -> dict:
     }
 
 
+def _described(sc, desc: str, fn, *args):
+    """Run ``fn(*args)`` under Spark job description ``desc``, then clear
+    it. The description is a thread-local property: a pool thread reused
+    for another task would otherwise tag that task's jobs with this name."""
+    sc.setJobDescription(desc)
+    try:
+        return fn(*args)
+    finally:
+        sc.setJobDescription(None)
+
+
 @dataclass
 class RoundResult:
     seen_delta: DataFrame  # lazy; used for the bloom delta build
@@ -212,6 +232,7 @@ def run_round(
     rank_offset: int,
     out_dir: str,
     n_frontier: int,
+    check_seen: bool,
     default_budget: int = 1_000_000,
     boundary_mode: str = "continue",
     bloom: DataFrame | None = None,
@@ -223,13 +244,18 @@ def run_round(
     ``n_frontier`` is the input frontier's row count (the caller has it
     from the previous round's frontier_next Observation).
 
+    ``check_seen`` runs step 1 against ``seen``, which must then be given.
+    Pass it only for a frontier that can hold seen urls; a frontier_next
+    that round K-1 wrote is disjoint from seen as of K-1, so without the
+    check candidates = frontier and nothing is deduped or deferred.
+
     A cross-round overlap was measured neutral: OPTIMIZATION_r08.md.
     """
     t_start = time.monotonic()
     C = _round_cols()
 
-    # 1. dedup against seen: exact tier, optionally bloom-prefiltered
-    # ('continue' mode), or the 'break' boundary variant (P9)
+    # 1. dedup against seen: exact, bloom-prefiltered with an exact
+    # backstop ('continue' mode), or the 'break' boundary variant (P9).
     # No count runs here as an eager job: each pre-write action serializes
     # the whole upstream materialization into a driver-gap-ridden AQE job
     # cascade (perfbench's ``spark.idle_core_share``). The counts come from
@@ -239,10 +265,12 @@ def run_round(
     # double-count a resubmitted map stage.
     boundary_deferred = None
     extra_persisted: list[DataFrame] = []
-    if boundary_mode == "break":
+    if not check_seen:
+        candidates = frontier
+    elif boundary_mode == "break":
         candidates, boundary_deferred = boundary_break_split(frontier, seen)
         candidates = candidates.persist()
-    elif bloom is not None and bloom_filter is not None and seen is not None:
+    elif bloom is not None:
         probed = bloom_filter.probe(frontier, bloom).persist()
         extra_persisted.append(probed)
         unseen = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
@@ -251,6 +279,8 @@ def run_round(
         candidates = unseen.unionByName(dedup_against_seen(maybe, seen)).persist()
     else:
         candidates = dedup_against_seen(frontier, seen).persist()
+    if check_seen:
+        extra_persisted.append(candidates)
 
     # 2. robots gate
     allowed, _ = robots_filter(candidates, robots)
@@ -296,30 +326,34 @@ def run_round(
     # job would idle), each job's 0.6-0.9 s driver-only planning/commit gap
     # hides behind the others' execution, and the remaining py4j
     # plan-construction time for the LATER outputs overlaps the EARLIER
-    # writes' execution instead of serializing ahead of all of them. Safe without phases: every shared intermediate
-    # (candidates, the politeness-ranked chain, fetched, the rank
-    # intermediate, parsed, links) is persisted, and Spark's block-level
-    # cache locking makes a concurrent consumer block on an in-progress
-    # partition instead of recomputing it — each cache partition is
-    # computed exactly once no matter which write job gets there first.
+    # writes' execution instead of serializing ahead of all of them. Safe
+    # without phases: every shared intermediate (checked candidates, the
+    # politeness-ranked chain, fetched, the rank intermediate, parsed,
+    # links) is persisted, and Spark's block-level cache locking makes a
+    # concurrent consumer block on an in-progress partition instead of
+    # recomputing it — each cache partition is computed exactly once no
+    # matter which write job gets there first.
     pool = ThreadPoolExecutor(max_workers=8)
+    sc = frontier.sparkSession.sparkContext
 
-    def _write(df, name):
-        # job description is a thread-local Spark property: each pool
-        # thread tags its own write so event-log/UI stages attribute to
-        # the output they produce (observability at cluster scale;
-        # perfbench's ``spark.task_s.<output>`` keys off this)
-        df.sparkSession.sparkContext.setJobDescription(
-            f"round{rnd}:write:{name}"
-        )
-        write_table(df, os.path.join(out_dir, name), mode="overwrite")
+    def _submit(desc, fn, *args):
+        # each task tags its jobs so event-log/UI stages attribute to what
+        # it produces (perfbench's ``spark.task_s.<output>`` keys off the
+        # write tags)
+        return pool.submit(_described, sc, f"round{rnd}:{desc}", fn, *args)
 
-    fs = [
-        pool.submit(_write, crawl_order, "crawl_order"),
-        # the rank-offset counts collect: one small job over the (by then
-        # cached) rank intermediate, overlapped with the writes
-        pool.submit(rank_info.resolve),
-    ]
+    def _write(name, df, after=None):
+        def run():
+            if after is not None:
+                after.result()
+            write_table(df, os.path.join(out_dir, name), mode="overwrite")
+
+        return _submit(f"write:{name}", run)
+
+    fs = [_write("crawl_order", crawl_order)]
+    # the rank-offset counts collect: one small job over the (by then
+    # cached) rank intermediate, overlapped with the writes
+    f_rank = _submit("rank_counts", rank_info.resolve)
 
     # 5. seen delta (not written — identical to crawl_order's url column)
     seen_delta = fetched.select("canonical_url")
@@ -376,14 +410,10 @@ def run_round(
         parsed.persist()
         links.persist()
 
-    # submitted BEFORE any dependent _write_after task: the pool is FIFO
-    # with 8 workers and at most two earlier tasks (crawl_order, rank), so
-    # this task always gets a worker ahead of anything that blocks on it
-    parse_cached = pool.submit(_register_parse_caches)
-
-    def _write_after(df, name):
-        parse_cached.result()
-        _write(df, name)
+    # submitted BEFORE any write that waits on it: the pool is FIFO with 8
+    # workers and at most two earlier tasks (crawl_order, rank), so this
+    # task always gets a worker ahead of anything that blocks on it
+    parse_cached = _submit("cache:parse", _register_parse_caches)
 
     # 8. expand: per dst, tuple-min over parents; exclude seen ∪ this round
     seen_now = (
@@ -417,7 +447,7 @@ def run_round(
         .observe(obs_frontier, *C["frontier_counts"])
         .drop("__src")
     )
-    fs.append(pool.submit(_write_after, frontier_next, "frontier_next"))
+    fs.append(_write("frontier_next", frontier_next, parse_cached))
     # P7: pinned-entry-once state — each attachment (keyed by id = md5 of
     # its absolute url; all other columns are functions of the url) enters
     # attachments_new exactly once across the whole crawl (reference:
@@ -433,37 +463,34 @@ def run_round(
         ).select(*C["atts_cols"])
     obs_atts = Observation()
     fs.append(
-        pool.submit(
-            _write_after, atts_new.observe(obs_atts, C["n"]), "attachments_new"
-        )
+        _write("attachments_new", atts_new.observe(obs_atts, C["n"]), parse_cached)
     )
     fs.append(
-        pool.submit(
-            _write_after, articles.observe(obs_articles, C["n"]), "articles"
-        )
+        _write("articles", articles.observe(obs_articles, C["n"]), parse_cached)
     )
     lineage = links.select(*C["lineage_sel"]).dropDuplicates(
         ["src_url", "dst_url"]
     )
-    fs.append(pool.submit(_write_after, lineage, "lineage"))
+    fs.append(_write("lineage", lineage, parse_cached))
 
-    # the one count job, needed only when robots rules can block: a scan
-    # of the candidates cache the writes fill. Counting the blocked rows
-    # instead re-runs the robots verdict and measured ~12% slower per
-    # recrawl round.
-    f_cand = pool.submit(candidates.count) if robots is not None else None
+    # the one count job, only in a round that ran step 1 (otherwise
+    # candidates is the frontier, counted already): a scan of the
+    # candidates cache the writes fill. Counting the blocked rows instead
+    # re-runs the robots verdict and measured ~12% slower per recrawl round.
+    f_cand = _submit("count:candidates", candidates.count) if check_seen else None
     t_submitted = time.monotonic()
     for f in fs:
         f.result()
     pool.shutdown(wait=True)
     t_written = time.monotonic()
-    n_fetched = rank_info.total
+    partition_counts = f_rank.result()
+    n_fetched = sum(partition_counts.values())
     n_parsed = obs_articles.get["n"]
     frontier_counts = obs_frontier.get
     n_carryover = frontier_counts["carry"]
     n_deferred = frontier_counts["deferred"]
     n_allowed = n_fetched + n_carryover
-    n_candidates = f_cand.result() if f_cand is not None else n_allowed
+    n_candidates = f_cand.result() if f_cand is not None else n_frontier
 
     metrics = {
         "round": rnd,
@@ -479,15 +506,13 @@ def run_round(
         "frontier_next_count": frontier_counts["n"],
         # per-partition fetch counts (north_rule: per-partition metrics),
         # recorded from the rank-offset pass at zero extra cost
-        "fetched_by_partition": {
-            str(k): v for k, v in rank_info.partition_counts.items()
-        },
+        "fetched_by_partition": {str(k): v for k, v in partition_counts.items()},
     }
     t_end = time.monotonic()
     return RoundResult(
         seen_delta=seen_delta,
         metrics=metrics,
-        persisted=[candidates, fetched, parsed, links] + extra_persisted,
+        persisted=[fetched, parsed, links] + extra_persisted,
         phases_s={
             "construct": round(t_submitted - t_start, 3),
             "writes": round(t_written - t_submitted, 3),

@@ -480,6 +480,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from colymer_acquirers_spark.operators.politeness import politeness_split
         from colymer_acquirers_spark.operators.ranking import global_rank
 
+        _drop_live_caches()
         d = _t(spark, sf, "documents")
         did = F.col("doc_id")
         url = F.concat(
@@ -508,7 +509,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .withColumn("max_fetch_per_round", F.lit(2))
         )
         fetched, _ = politeness_split(candidates, politeness)
-        ranked = global_rank(fetched, ["priority", "depth", "canonical_url"], "crawl_rank")
+        keys = ["priority", "depth", "canonical_url"]
+        ranked, info = global_rank(fetched, keys, "crawl_rank", return_info=True)
+        _register_live_caches([info.persisted])
         return ranked.select("crawl_rank", F.col("canonical_url").alias("url"), "host")
     q["crawl_one_round_schedule"] = crawl_one_round_schedule
 

@@ -104,7 +104,8 @@ def test_table_is_self_describing(spark):
 def test_crawl_autosize_resizes_and_stays_exact(spark, tmp_path):
     """A deliberately tiny bloom must get rebuilt at compaction (estimated
     FPR over threshold) with results identical to the exact-only run, and
-    a resume after the resize must probe with the persisted geometry."""
+    a resume after the resize must keep the persisted geometry: its first
+    bloom ``merge`` raises on mismatched filter parameters."""
     import os
 
     from pyspark.sql import functions as F  # noqa: F811

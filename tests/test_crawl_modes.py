@@ -1,22 +1,29 @@
 """Mode-variant equivalence (SURVEY.md §5.4 tests 1, 4, 5):
 
-- bloom-prefiltered crawl ≡ exact crawl ≡ pyref (bloom soundness end-to-end)
+- bloom-prefiltered crawl ≡ exact crawl, through an evict-and-reseed call
+  whose first round probes the bloom
 - break-boundary crawl ≡ pyref break mode (P9 variant), differing from
   continue mode on the same pre-seen state
 - kill/resume ≡ straight run
+- step 1 (the seen check) runs only on a seed-built frontier, and every
+  frontier_next is disjoint from seen as of its round
 """
 
 from __future__ import annotations
+
+import os
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from colymer_acquirers_spark import pyref
+from colymer_acquirers_spark import pyref, schemas
 from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
 from colymer_acquirers_spark.plans.crawl import (
     committed_rounds,
+    evict_seen,
     read_output,
+    read_seen,
     run_crawl,
 )
 from colymer_acquirers_spark.sources.synth import (
@@ -56,16 +63,48 @@ def _pyref_order(res):
     )
 
 
-def test_bloom_crawl_identical_to_exact(spark, web, tmp_path_factory):
+def _pre_seen(pages):
+    """Every 3rd page url, seen before the crawl starts."""
+    return pages.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 0).select(
+        F.col("url").alias("canonical_url")
+    )
+
+
+def _evict_first(spark, wd):
+    """Evict the rank-0 url; returns it as a one-row reseed frame."""
+    url = read_output(spark, wd, "crawl_order").orderBy("rank").first()["url"]
+    target = spark.createDataFrame([(url, 0)], ["url", "priority"])
+    evict_seen(spark, wd, target.select("url"))
+    return target
+
+
+def test_bloom_crawl_identical_to_exact(spark, web, tmp_path_factory, monkeypatch):
+    """A fresh crawl never probes its bloom (round 0 has none, later rounds
+    skip step 1), so each crawl ends with an evict-and-reseed call whose
+    first round must probe it; the evicted url's stale positive goes
+    through the exact backstop."""
     pages, seeds, pol, rob = web
+    probes = []
+    probe = BloomSeen.probe
+
+    def counted_probe(self, *a):
+        probes.append(1)
+        return probe(self, *a)
+
+    monkeypatch.setattr(BloomSeen, "probe", counted_probe)
     wd_exact = str(tmp_path_factory.mktemp("exact"))
     wd_bloom = str(tmp_path_factory.mktemp("bloom"))
-    run_crawl(spark, pages, seeds, pol, rob, wd_exact, max_rounds=ROUNDS)
-    run_crawl(
-        spark, pages, seeds, pol, rob, wd_bloom, max_rounds=ROUNDS,
-        use_bloom=True, bloom_filter=BloomSeen(n_shards=8, m_bits=1 << 16),
-    )
+    bloom_kw = dict(use_bloom=True, bloom_filter=BloomSeen(n_shards=8, m_bits=1 << 16))
+    for wd, kw in ((wd_exact, {}), (wd_bloom, bloom_kw)):
+        run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=ROUNDS, **kw)
+        target = _evict_first(spark, wd)
+        run_crawl(
+            spark, pages, seeds, pol, rob, wd, max_rounds=ROUNDS + 1,
+            reseed=target, **kw,
+        )
+    assert len(probes) == 1, "the reseed call's first round probes the bloom"
     a, b = _order(spark, wd_exact), _order(spark, wd_bloom)
+    assert set(a["round"]) == set(range(ROUNDS + 1))
     pd.testing.assert_frame_equal(a, b)
     sa = set(read_output(spark, wd_exact, "seen_delta").toPandas()["canonical_url"])
     sb = set(read_output(spark, wd_bloom, "seen_delta").toPandas()["canonical_url"])
@@ -75,9 +114,7 @@ def test_bloom_crawl_identical_to_exact(spark, web, tmp_path_factory):
 def test_break_mode_matches_pyref(spark, web, tmp_path_factory):
     pages, seeds, pol, rob = web
     # pre-seen state: every 3rd page URL → frontier genuinely hits boundaries
-    pre = pages.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 0).select(
-        F.col("url").alias("canonical_url")
-    )
+    pre = _pre_seen(pages)
     pre_set = set(pre.toPandas()["canonical_url"])
 
     golden = pyref.crawl(
@@ -240,9 +277,7 @@ def test_manifest_metrics_match_pyref(spark, web, tmp_path_factory, mode):
     mode = dict(mode)
     resume_after = mode.pop("resume_after", None)
     no_robots = mode.pop("no_robots", False)
-    pre = pages.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 0).select(
-        F.col("url").alias("canonical_url")
-    )
+    pre = _pre_seen(pages)
     rob_pd = rob.toPandas()
     golden = pyref.crawl(
         pages.toPandas(), seeds.toPandas(), pol.toPandas(),
@@ -275,3 +310,178 @@ def test_manifest_metrics_match_pyref_until_frontier_empty(spark, tmp_path_facto
     res = run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=max_rounds)
     _assert_manifests_match(wd, golden)
     assert res["metrics"][-1]["frontier_next_count"] == 0
+
+
+def _count_step1(monkeypatch):
+    """Count the step-1 operator calls of every run_round call; returns the
+    list the counts land in, as (round, calls)."""
+    from colymer_acquirers_spark.plans import crawl as crawl_mod
+    from colymer_acquirers_spark.plans import round as round_mod
+
+    hits = []
+
+    def counted(fn):
+        def wrapper(*a, **k):
+            hits.append(fn.__name__)
+            return fn(*a, **k)
+
+        return wrapper
+
+    for name in ("dedup_against_seen", "boundary_break_split"):
+        monkeypatch.setattr(round_mod, name, counted(getattr(round_mod, name)))
+    monkeypatch.setattr(BloomSeen, "probe", counted(BloomSeen.probe))
+    per_round = []
+    run_round = crawl_mod.run_round
+
+    def counted_round(*a, **k):
+        n = len(hits)
+        out = run_round(*a, **k)
+        per_round.append((a[5], len(hits) - n))
+        return out
+
+    monkeypatch.setattr(crawl_mod, "run_round", counted_round)
+    return per_round
+
+
+def _seen_after(spark, wd, k):
+    seen_base = spark.read.schema(schemas.SEEN).parquet(
+        os.path.join(wd, "initial_seen")
+    )
+    return read_seen(spark, wd, k, seen_base)
+
+
+def _rows(df, key):
+    return df.toPandas().sort_values(key).reset_index(drop=True)
+
+
+def test_step1_runs_only_on_seed_built_frontiers(
+    spark, web, tmp_path_factory, monkeypatch
+):
+    """A straight crawl and the same crawl split after round 1 both run
+    step 1 in round 0 only and give identical outputs and seen; a later
+    reseed call runs it in its first round only (bloom probe plus the
+    exact backstop)."""
+    pages, seeds, pol, rob = web
+    kw = dict(initial_seen=_pre_seen(pages), use_bloom=True)
+    calls = _count_step1(monkeypatch)
+    wd_a = str(tmp_path_factory.mktemp("straight"))
+    wd_b = str(tmp_path_factory.mktemp("split"))
+    run_crawl(spark, pages, seeds, pol, rob, wd_a, max_rounds=ROUNDS, **kw)
+    assert calls == [(0, 1), (1, 0), (2, 0)]
+    calls.clear()
+    run_crawl(spark, pages, seeds, pol, rob, wd_b, max_rounds=1, **kw)
+    run_crawl(spark, pages, seeds, pol, rob, wd_b, max_rounds=ROUNDS, **kw)
+    assert calls == [(0, 1), (1, 0), (2, 0)]
+
+    pd.testing.assert_frame_equal(_order(spark, wd_a), _order(spark, wd_b))
+    arts = [
+        _rows(read_output(spark, wd, "articles").drop("attachments"), "canonical_url")
+        for wd in (wd_a, wd_b)
+    ]
+    pd.testing.assert_frame_equal(*arts)
+    lins = [
+        _rows(read_output(spark, wd, "lineage"), ["src_url", "dst_url"])
+        for wd in (wd_a, wd_b)
+    ]
+    pd.testing.assert_frame_equal(*lins)
+    seens = [
+        set(_seen_after(spark, wd, ROUNDS - 1).toPandas()["canonical_url"])
+        for wd in (wd_a, wd_b)
+    ]
+    assert seens[0] == seens[1]
+
+    calls.clear()
+    target = _evict_first(spark, wd_b)
+    run_crawl(
+        spark, pages, seeds, pol, rob, wd_b, max_rounds=ROUNDS + 2,
+        reseed=target, **kw,
+    )
+    assert calls == [(ROUNDS, 2), (ROUNDS + 1, 0)]
+
+
+@pytest.mark.parametrize(
+    "mode",
+    [
+        pytest.param(
+            dict(use_bloom=True, compact_every=1, resume_after=1),
+            id="bloom-compact-resume",
+        ),
+        pytest.param(dict(boundary_mode="break"), id="break"),
+        pytest.param(dict(use_bloom=True, evict_reseed=True), id="evict-reseed"),
+    ],
+)
+def test_frontier_next_disjoint_from_seen(spark, web, tmp_path_factory, mode):
+    """frontier_next(K) ∩ read_seen(K) = ∅ for every committed round: the
+    fact that lets every round but a call's seed-built first one skip
+    step 1."""
+    pages, seeds, pol, rob = web
+    mode = dict(mode)
+    resume_after = mode.pop("resume_after", None)
+    evict_reseed = mode.pop("evict_reseed", False)
+    kw = dict(initial_seen=_pre_seen(pages), **mode)
+    wd = str(tmp_path_factory.mktemp("disjoint"))
+    for rounds in ([resume_after] if resume_after else []) + [ROUNDS]:
+        run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=rounds, **kw)
+    if evict_reseed:
+        target = _evict_first(spark, wd)
+        run_crawl(
+            spark, pages, seeds, pol, rob, wd, max_rounds=ROUNDS + 2,
+            reseed=target, **kw,
+        )
+    ks = committed_rounds(wd)
+    assert len(ks) == ROUNDS + (2 if evict_reseed else 0)
+    for k in ks:
+        nxt = spark.read.schema(schemas.FRONTIER).parquet(
+            os.path.join(wd, "rounds", str(k), "frontier_next")
+        )
+        hits = nxt.join(_seen_after(spark, wd, k), "canonical_url", "left_semi")
+        assert hits.count() == 0, k
+
+
+def test_run_crawl_leaves_no_persisted_rdd(spark, web, tmp_path_factory):
+    """A fresh call with initial_seen and a reseed call each leave no
+    persisted RDD behind: the seed-built frontier is freed after its
+    round commits."""
+    pages, _, pol, rob = web
+    # seeds no other test uses: a frontier an earlier crawl leaked over the
+    # module's seeds would match structurally and hide a new one
+    seeds = synth_seeds(spark, 7)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    wd = str(tmp_path_factory.mktemp("nocache"))
+    kw = dict(initial_seen=_pre_seen(pages), use_bloom=True)
+    run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=2, **kw)
+    assert set(rdds().keySet()) - before == set()
+    target = _evict_first(spark, wd)
+    run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=3, reseed=target, **kw)
+    assert set(rdds().keySet()) - before == set()
+
+
+def test_pooled_tasks_set_and_clear_their_job_description(
+    spark, web, tmp_path_factory, monkeypatch
+):
+    """The rank-counts job runs under its own description, not a write's,
+    and a pool thread reused after a tagged task carries no description."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from colymer_acquirers_spark.operators.ranking import RankInfo
+    from colymer_acquirers_spark.plans.round import _described
+
+    sc = spark.sparkContext
+    descs = []
+    resolve = RankInfo.resolve
+
+    def described_resolve(self):
+        descs.append(sc.getLocalProperty("spark.job.description"))
+        return resolve(self)
+
+    monkeypatch.setattr(RankInfo, "resolve", described_resolve)
+    pages, seeds, pol, rob = web
+    wd = str(tmp_path_factory.mktemp("desc"))
+    run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=2)
+    assert descs == ["round0:rank_counts", "round1:rank_counts"]
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        pool.submit(_described, sc, "round0:write:crawl_order", lambda: None).result()
+        left = pool.submit(sc.getLocalProperty, "spark.job.description").result()
+    assert left is None

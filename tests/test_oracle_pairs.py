@@ -122,6 +122,19 @@ def test_pair(spark, duck, name):
     _assert_pair_matches(spark_tbl, duck_tbl, name)
 
 
+def test_crawl_schedule_entry_leaves_no_cache(spark):
+    """The crawl-schedule entry registers its rank cache, so dropping the
+    catalog's live caches leaves no persisted RDD behind."""
+    from colymer_acquirers_spark.queries import _drop_live_caches
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    _drop_live_caches()
+    before = set(rdds().keySet())
+    entrymod.queries()["crawl_one_round_schedule"](spark, SF_DIR).collect()
+    _drop_live_caches()
+    assert set(rdds().keySet()) - before == set()
+
+
 def test_uncast_oracle_sum_fails(spark, duck):
     """Regression for the r01/r02/r03 blind-spot class: a DuckDB aggregate
     whose Arrow type drifts from Spark's (HUGEINT/decimal128 vs bigint)
