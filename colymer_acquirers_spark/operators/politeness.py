@@ -156,8 +156,9 @@ def politeness_split(
     (host, salt=murmur3(canonical_url) mod SKEW_SALT) groups — parallel
     even inside one host — and any row ranked > budget *locally* is already
     > budget globally, so it goes straight to carryover. Phase 2 ranks the
-    ≤ SKEW_SALT·budget survivors per host exactly. The fetched set is identical to the
-    single-window result (exactness property of two-phase top-k).
+    ≤ SKEW_SALT·budget survivors per host exactly. The fetched set is
+    identical to the single-window result (exactness property of two-phase
+    top-k).
     """
     frag = _split_fragments(int(default_budget))
     if politeness is not None:

@@ -114,7 +114,9 @@ def test_bloom_crawl_identical_to_exact(spark, web, tmp_path_factory, monkeypatc
 def test_break_mode_matches_pyref(spark, web, tmp_path_factory):
     pages, seeds, pol, rob = web
     # pre-seen state: every 3rd page URL → frontier genuinely hits boundaries
-    pre = _pre_seen(pages)
+    pre = pages.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 0).select(
+        F.col("url").alias("canonical_url")
+    )
     pre_set = set(pre.toPandas()["canonical_url"])
 
     golden = pyref.crawl(
@@ -277,7 +279,9 @@ def test_manifest_metrics_match_pyref(spark, web, tmp_path_factory, mode):
     mode = dict(mode)
     resume_after = mode.pop("resume_after", None)
     no_robots = mode.pop("no_robots", False)
-    pre = _pre_seen(pages)
+    pre = pages.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == 0).select(
+        F.col("url").alias("canonical_url")
+    )
     rob_pd = rob.toPandas()
     golden = pyref.crawl(
         pages.toPandas(), seeds.toPandas(), pol.toPandas(),
