@@ -356,18 +356,24 @@ def run_crawl(
     (the bloom is a prefilter with an exact backstop — never changes
     results, only the amount of exact anti-join work).
 
+    ``initial_seen`` is persisted by the first call that passes it, and
+    only before any round has committed: a call that passes it to a
+    workdir with committed rounds and no persisted ``initial_seen``
+    raises ``ValueError`` and writes nothing. Later calls reuse the
+    persisted set and ignore the argument.
+
     Step 1 (the seen check) runs only in the call's first round, and only
     when that frontier can hold seen urls: the call built it from
-    ``seeds`` (no committed round yet), merged ``reseed`` urls into it, or
-    wrote ``initial_seen`` for the first time. Every other round starts
-    from the frontier_next the round before wrote, and step 9 made that
-    disjoint from seen. A resumed call makes the same choice with no
-    stored record: a frontier_next(K) row is unseen in ``read_seen(K)``
-    when written, and nothing outside a call grows seen except a first
-    ``initial_seen`` write (``evict_seen`` only removes urls; compaction
-    keeps the set). So the bloom is probed only when such a first round
-    comes after round 0, which has no bloom yet: in practice, a reseed
-    call's.
+    ``seeds`` (no committed round yet) or merged ``reseed`` urls into it.
+    Every other round starts from the frontier_next the round before
+    wrote, and step 9 made that disjoint from seen. A resumed call makes
+    the same choice with no stored record: a frontier_next(K) row is
+    unseen in ``read_seen(K)`` when written, and nothing outside a round
+    grows seen (``initial_seen`` is written before round 0 runs;
+    ``evict_seen`` only removes urls; compaction keeps the set). So the
+    bloom is probed only in a reseed call's first round, and that bloom
+    already holds ``initial_seen``: round 0 builds it in, and a rebuild
+    reads the full seen state.
 
     Each round's ``manifest.json`` holds its exact ``metrics`` (the
     deterministic counts, equal to ``pyref.crawl``'s) and, beside them,
@@ -389,6 +395,19 @@ def run_crawl(
     backstop. The rebuild replaces the round's bloom through the staged
     swap every state table uses (``tables._replace_committed``).
     """
+    done = committed_rounds(workdir)
+    # pre-existing seen state (reference analog: chain blocks from a prior
+    # scan, acquirer.py:21-22); persisted once so resume sees the same state
+    seen_base_path = os.path.join(workdir, "initial_seen")
+    if initial_seen is not None and not os.path.exists(seen_base_path):
+        if done:
+            raise ValueError(
+                f"initial_seen given to {workdir!r}, which has committed "
+                "rounds crawled without it; start a new workdir"
+            )
+        initial_seen.select("canonical_url").write.mode("overwrite").parquet(
+            seen_base_path
+        )
     if use_bloom and bloom_filter is None:
         bloom_filter = BloomSeen()
     # overlap the one-time parse/envelope tree construction + first-query
@@ -398,26 +417,13 @@ def run_crawl(
     threading.Thread(
         target=_warm_parse_exprs, args=(spark,), daemon=True
     ).start()
-    # pre-existing-state count enters the occupancy estimate exactly once
-    n_seen_base = 0
-
-    # pre-existing seen state (reference analog: chain blocks from a prior
-    # scan, acquirer.py:21-22); persisted once so resume sees the same state
-    seen_base_path = os.path.join(workdir, "initial_seen")
-    wrote_seen_base = initial_seen is not None and not os.path.exists(
-        seen_base_path
-    )
-    if wrote_seen_base:
-        initial_seen.select("canonical_url").write.mode("overwrite").parquet(
-            seen_base_path
-        )
     seen_base = (
         spark.read.schema(schemas.SEEN).parquet(seen_base_path)
         if os.path.exists(seen_base_path)
         else None
     )
-    if use_bloom and seen_base is not None:
-        n_seen_base = seen_base.count()
+    # pre-existing-state count enters the occupancy estimate exactly once
+    n_seen_base = seen_base.count() if use_bloom and seen_base is not None else 0
     # canonicalize once, reuse across rounds (at warehouse scale the pages
     # table stores canonical_url as a bucketed column instead — see README).
     # A parse-once page store was measured slower: OPTIMIZATION_r08.md.
@@ -429,8 +435,6 @@ def run_crawl(
         from colymer_acquirers_spark.operators.politeness import compile_robots
 
         robots = compile_robots(robots)
-
-    done = committed_rounds(workdir)
 
     if done:
         last = done[-1]
@@ -458,9 +462,8 @@ def run_crawl(
 
     # step 1 runs in the call's first round only, and only when its
     # frontier can hold seen urls (see the docstring)
-    seed_built = not done or reseed is not None
-    check_seen = seed_built or wrote_seen_base
-    if seed_built:
+    check_seen = not done or reseed is not None
+    if check_seen:
         # one count job per seed-built frontier; later rounds get the
         # count from the frontier_next write's Observation
         frontier = frontier.persist()

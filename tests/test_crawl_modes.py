@@ -7,6 +7,7 @@
 - kill/resume ≡ straight run
 - step 1 (the seen check) runs only on a seed-built frontier, and every
   frontier_next is disjoint from seen as of its round
+- initial_seen is refused once rounds have committed without it
 """
 
 from __future__ import annotations
@@ -432,14 +433,56 @@ def test_frontier_next_disjoint_from_seen(spark, web, tmp_path_factory, mode):
             spark, pages, seeds, pol, rob, wd, max_rounds=ROUNDS + 2,
             reseed=target, **kw,
         )
-    ks = committed_rounds(wd)
-    assert len(ks) == ROUNDS + (2 if evict_reseed else 0)
-    for k in ks:
+    assert len(committed_rounds(wd)) == ROUNDS + (2 if evict_reseed else 0)
+    _assert_disjoint_from_seen(spark, wd)
+
+
+def _assert_disjoint_from_seen(spark, wd):
+    for k in committed_rounds(wd):
         nxt = spark.read.schema(schemas.FRONTIER).parquet(
             os.path.join(wd, "rounds", str(k), "frontier_next")
         )
         hits = nxt.join(_seen_after(spark, wd, k), "canonical_url", "left_semi")
         assert hits.count() == 0, k
+
+
+def test_initial_seen_only_before_the_first_round(
+    spark, web, tmp_path_factory, monkeypatch
+):
+    """initial_seen given to a workdir whose committed rounds were crawled
+    without it is refused and leaves nothing on disk, so no resumed round
+    can meet seen urls it does not check; written by a call that runs no
+    round, it is checked in round 0 of the next call, and both crawls
+    equal pyref's."""
+    pages, seeds, pol, rob = web
+    pre = _pre_seen(pages)
+    pd_args = (pages.toPandas(), seeds.toPandas(), pol.toPandas(), rob.toPandas())
+    kw = dict(initial_seen=pre, use_bloom=True)
+
+    wd_a = str(tmp_path_factory.mktemp("late_seen"))
+    run_crawl(spark, pages, seeds, pol, rob, wd_a, max_rounds=1)
+    for rounds in (1, ROUNDS):
+        with pytest.raises(ValueError, match="initial_seen"):
+            run_crawl(spark, pages, seeds, pol, rob, wd_a, max_rounds=rounds, **kw)
+    assert not os.path.exists(os.path.join(wd_a, "initial_seen"))
+    assert committed_rounds(wd_a) == [0]
+    run_crawl(spark, pages, seeds, pol, rob, wd_a, max_rounds=ROUNDS, use_bloom=True)
+    golden = pyref.crawl(*pd_args, max_rounds=ROUNDS)
+    pd.testing.assert_frame_equal(_order(spark, wd_a), _pyref_order(golden))
+
+    calls = _count_step1(monkeypatch)
+    wd_b = str(tmp_path_factory.mktemp("seen_no_round"))
+    assert run_crawl(spark, pages, seeds, pol, rob, wd_b, max_rounds=0, **kw)[
+        "rounds"
+    ] == []
+    run_crawl(spark, pages, seeds, pol, rob, wd_b, max_rounds=ROUNDS, **kw)
+    assert calls == [(0, 1), (1, 0), (2, 0)]
+    golden = pyref.crawl(
+        *pd_args, max_rounds=ROUNDS,
+        initial_seen=set(pre.toPandas()["canonical_url"]),
+    )
+    pd.testing.assert_frame_equal(_order(spark, wd_b), _pyref_order(golden))
+    _assert_disjoint_from_seen(spark, wd_b)
 
 
 def test_run_crawl_leaves_no_persisted_rdd(spark, web, tmp_path_factory):
