@@ -173,16 +173,18 @@ def politeness_split(
     drop_cols = ["__rn", "__b", "max_fetch_per_round", "__salt", "__lrn"]
     j = j.withColumn("__salt", frag["salt"])
     j = j.withColumn("__lrn", frag["lrn"])
+    if persisted is not None:
+        # every split part (fetched, the rank carryover and the phase-1
+        # prunes) derives from the phase-1 frame; caching it makes the
+        # upstream robots verdict, budget join and salted window run once
+        # per round instead of once per part (the caller owns the
+        # unpersist after its terminal actions)
+        j = j.persist()
+        persisted.append(j)
     survivors = j.filter(frag["lrn_keep"])
     pruned = j.filter(frag["lrn_prune"])
 
     ranked = survivors.withColumn("__rn", frag["rn"])
-    if persisted is not None:
-        # both split halves derive from `ranked`; caching it makes the
-        # join + two-window chain run once per round instead of once per
-        # half (the caller owns the unpersist after its terminal actions)
-        ranked = ranked.persist()
-        persisted.append(ranked)
     fetched = ranked.filter(frag["rn_keep"]).drop(*drop_cols)
     carryover = (
         ranked.filter(frag["rn_carry"])

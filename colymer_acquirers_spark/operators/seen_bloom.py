@@ -18,18 +18,14 @@ acquirer.py:10-22``) — an interval-compressed "have I fetched this" structure
   backstop — the bloom can never FALSE-DROP a URL (SURVEY.md §5.4 test 4).
 
 Sizing (10^10-URL frontier): 10 bits/key ≈ 12.5 GB total ⇒ ~200 shards of
-64 MB; shards live in the round checkpoint and OR-merge incrementally (the
-analog of block compaction, ``acquirer.py:46-58``). ``BloomSeen.sized``
-derives (n_shards, m_bits, k) from expected item count + target FPR using
-exactly that arithmetic; the crawl loop re-sizes at compaction when the
-accumulated occupancy pushes the estimated FPR past 2× ``TARGET_FPR``
-(rebuilding from the exact seen set, which compaction has in hand anyway).
+64 MB. ``BloomSeen.sized`` derives (n_shards, m_bits, k) from expected item
+count + target FPR using exactly that arithmetic. The crawl loop builds a
+filter only in a round that checks seen, from that round's exact seen
+frame and sized for it, and keeps none: no shard table is stored, merged
+across rounds, resized or restored on resume.
 
-Eviction (``plans.crawl.evict_seen``) never touches the shards: a bloom
-cannot delete, and it does not need to. An evicted URL keeps probing
-maybe-seen, so it goes to the exact anti-join backstop, which no longer
-holds it and lets it through. A stale positive costs one exact lookup,
-never a result.
+Eviction (``plans.crawl.evict_seen``) needs nothing here: ``read_seen``
+subtracts evicted URLs before the build, so they are not in the filter.
 """
 
 from __future__ import annotations
@@ -42,10 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# self-describing: every row carries its filter geometry, so a resumed
-# process reconstructs the exact (n_shards, m_bits, k) the persisted bytes
-# were built with — a params mismatch would turn bloom bit positions into
-# garbage and break the never-false-drop invariant silently
+# self-describing: every row carries its filter geometry (read back by
+# ``from_table``; ``merge`` refuses rows built under different geometries,
+# whose bit positions would not line up)
 BLOOM_SCHEMA = T.StructType(
     [
         T.StructField("shard", T.IntegerType(), False),
@@ -60,7 +55,7 @@ BLOOM_SCHEMA = T.StructType(
 DEFAULT_M_BITS = 1 << 20  # 128 KiB per shard (test scale)
 DEFAULT_K = 5
 DEFAULT_SHARDS = 32
-TARGET_FPR = 0.01  # sizing target; the crawl loop re-sizes past 2× this
+TARGET_FPR = 0.01  # default sizing target of ``BloomSeen.sized``
 
 
 def _with_hashes(df: DataFrame, n_shards: int) -> DataFrame:
@@ -79,8 +74,6 @@ def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m_bits: int) -> np.ndarra
 
 
 class BloomSeen:
-    SCHEMA = BLOOM_SCHEMA  # shard-table schema (crawl loop reads via this)
-
     def __init__(
         self,
         n_shards: int = DEFAULT_SHARDS,
@@ -117,7 +110,7 @@ class BloomSeen:
         return cls(n_shards=n_shards, m_bits=m_bits, k=k)
 
     def params(self) -> dict:
-        """Persistable construction parameters (round-checkpoint sidecar)."""
+        """Construction parameters."""
         return {"n_shards": self.n_shards, "m_bits": self.m_bits, "k": self.k}
 
     def estimated_fpr(self, n_items_total: int) -> float:
@@ -128,9 +121,8 @@ class BloomSeen:
 
     @classmethod
     def from_table(cls, blooms: DataFrame) -> "BloomSeen | None":
-        """Reconstruct the filter a persisted shard table was built with
-        (self-describing geometry columns). One tiny driver job; used on
-        resume, never per round."""
+        """Reconstruct the filter a shard table was built with (its
+        geometry columns). One tiny driver job."""
         row = blooms.select("n_shards", "m_bits", "k").first()
         if row is None:
             return None
@@ -163,7 +155,8 @@ class BloomSeen:
         )
 
     def merge(self, blooms: DataFrame) -> DataFrame:
-        """OR-merge bloom rows per shard (compaction / round accumulation)."""
+        """OR-merge bloom rows per shard: the filter of the union of the
+        sets the rows were built from."""
 
         def orit(pdf: pd.DataFrame) -> pd.DataFrame:
             # OR-merging rows built under different geometries is meaningless

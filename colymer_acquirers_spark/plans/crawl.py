@@ -17,7 +17,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,7 +24,7 @@ from pyspark.sql import functions as F
 from colymer_acquirers_spark import schemas
 from colymer_acquirers_spark.functions.canonical import host_of
 from colymer_acquirers_spark.operators.seen import compact_seen, merge_frontier
-from colymer_acquirers_spark.operators.seen_bloom import TARGET_FPR, BloomSeen
+from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
 from colymer_acquirers_spark.plans.round import (
     FRONTIER_COLS,
     bootstrap_frontier,
@@ -253,9 +252,7 @@ def evict_seen(spark: SparkSession, workdir: str, urls: DataFrame) -> int:
     stored row).
 
     Stamped with the last committed round: only fetches at rounds ≤ stamp
-    are forgotten, so the re-fetch itself stays seen afterwards. The bloom
-    prefilter is left as it is: its stale positive routes those urls
-    through the exact backstop, which now correctly misses. Pair with
+    are forgotten, so the re-fetch itself stays seen afterwards. Pair with
     ``run_crawl(..., reseed=urls)`` so the urls re-enter the frontier.
 
     Returns the eviction stamp (as_of round).
@@ -317,18 +314,6 @@ def read_pinned(spark: SparkSession, workdir: str, upto: int) -> DataFrame | Non
     return base if delta is None else base.unionByName(delta)
 
 
-def _read_bloom(spark: SparkSession, workdir: str, k: int) -> DataFrame | None:
-    """Round ``k``'s committed bloom shard table, or None when it is absent
-    or uncommitted (the caller then rebuilds it from the full seen state)."""
-    try:
-        return read_table(
-            spark, os.path.join(_round_dir(workdir, k), "bloom"),
-            schema=BloomSeen.SCHEMA,
-        )
-    except FileNotFoundError:
-        return None
-
-
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -340,7 +325,6 @@ def run_crawl(
     default_budget: int = 1_000_000,
     boundary_mode: str = "continue",
     use_bloom: bool = False,
-    bloom_filter: "BloomSeen | None" = None,
     initial_seen: DataFrame | None = None,
     compact_every: int = 8,
     reseed: DataFrame | None = None,
@@ -370,30 +354,22 @@ def run_crawl(
     the same choice with no stored record: a frontier_next(K) row is
     unseen in ``read_seen(K)`` when written, and nothing outside a round
     grows seen (``initial_seen`` is written before round 0 runs;
-    ``evict_seen`` only removes urls; compaction keeps the set). So the
-    bloom is probed only in a reseed call's first round, and that bloom
-    already holds ``initial_seen``: round 0 builds it in, and a rebuild
-    reads the full seen state.
+    ``evict_seen`` only removes urls; compaction keeps the set).
+
+    With ``use_bloom``, a round that runs step 1 in continue mode builds
+    a bloom from that round's seen frame and probes the frontier with it;
+    only bloom-positive rows go through the exact anti-join. The filter is
+    sized for an upper bound on the seen count (every fetch so far plus
+    the ``initial_seen`` rows, counted only in that round). Built from the
+    exact set it guards, it is sound by construction, so no round stores,
+    merges or resizes one; ``rounds/K/bloom`` dirs in older workdirs are
+    ignored.
 
     Each round's ``manifest.json`` holds its exact ``metrics`` (the
     deterministic counts, equal to ``pyref.crawl``'s) and, beside them,
     ``phases_s``: driver wall seconds for plan construction, the pooled
-    writes, the metrics gather and the bloom build. Seen/pinned
-    compaction runs after the manifest commits, so its time is not in
-    any manifest.
-
-    Each round writes its accumulated bloom as a committed table under
-    ``rounds/K/bloom``. A bloom that is missing or uncommitted on resume
-    is rebuilt from the full seen state (the safe direction — a
-    half-written bloom could false-drop URLs).
-
-    Bloom auto-sizing: when the accumulated seen count pushes the filter's
-    estimated FPR past 2× ``TARGET_FPR``, the next compaction rebuilds the
-    bloom RIGHT-SIZED (BloomSeen.sized, 4× headroom) from the exact seen
-    set it is compacting anyway — without this, fixed shards silently
-    saturate (FPR→1) and every probe falls through to the exact anti-join
-    backstop. The rebuild replaces the round's bloom through the staged
-    swap every state table uses (``tables._replace_committed``).
+    writes and the metrics gather. Seen/pinned compaction runs after the
+    manifest commits, so its time is not in any manifest.
     """
     done = committed_rounds(workdir)
     # pre-existing seen state (reference analog: chain blocks from a prior
@@ -408,8 +384,6 @@ def run_crawl(
         initial_seen.select("canonical_url").write.mode("overwrite").parquet(
             seen_base_path
         )
-    if use_bloom and bloom_filter is None:
-        bloom_filter = BloomSeen()
     # overlap the one-time parse/envelope tree construction + first-query
     # codegen with round 0's early stages (see _warm_parse_exprs)
     import threading
@@ -422,8 +396,6 @@ def run_crawl(
         if os.path.exists(seen_base_path)
         else None
     )
-    # pre-existing-state count enters the occupancy estimate exactly once
-    n_seen_base = seen_base.count() if use_bloom and seen_base is not None else 0
     # canonicalize once, reuse across rounds (at warehouse scale the pages
     # table stores canonical_url as a bucketed column instead — see README).
     # A parse-once page store was measured slower: OPTIMIZATION_r08.md.
@@ -471,13 +443,6 @@ def run_crawl(
 
     all_metrics = [read_manifest(workdir, k)["metrics"] for k in done]
 
-    # resume must probe with the geometry the persisted shard bytes were
-    # built with (the bloom may have been auto-resized since the run began)
-    if use_bloom and done:
-        last_bloom = _read_bloom(spark, workdir, done[-1])
-        if last_bloom is not None:
-            bloom_filter = BloomSeen.from_table(last_bloom) or bloom_filter
-
     for rnd in range(start_round, max_rounds):
         if frontier_count == 0:
             break
@@ -485,12 +450,18 @@ def run_crawl(
             read_seen(spark, workdir, rnd - 1, seen_base) if rnd > 0 else seen_base
         )
         pinned_prior = read_pinned(spark, workdir, rnd - 1) if rnd > 0 else None
-        bloom = _read_bloom(spark, workdir, rnd - 1) if use_bloom and rnd > 0 else None
         rd = _round_dir(workdir, rnd)
         # clean any uncommitted leftovers from a crashed attempt
         if os.path.isdir(rd) and not os.path.exists(_manifest_path(workdir, rnd)):
             shutil.rmtree(rd)
         os.makedirs(rd, exist_ok=True)
+        step1 = check_seen and seen is not None
+        bloom_filter = None
+        if step1 and use_bloom and boundary_mode == "continue":
+            # an upper bound on |seen|: every fetch so far plus the
+            # initial seen rows
+            n_seen = rank_offset + (seen_base.count() if seen_base is not None else 0)
+            bloom_filter = BloomSeen.sized(max(n_seen, 1024))
         rr = run_round(
             frontier,
             seen,
@@ -502,34 +473,12 @@ def run_crawl(
             out_dir=rd,
             default_budget=default_budget,
             boundary_mode=boundary_mode,
-            bloom=bloom,
             bloom_filter=bloom_filter,
             n_frontier=frontier_count,
-            check_seen=check_seen and seen is not None,
+            check_seen=step1,
             pinned_prior=pinned_prior,
         )
         check_seen = False
-        t_bloom = time.monotonic()
-        if use_bloom:
-            # accumulate: OR-merge previous bloom with this round's delta;
-            # the round-0 bloom must also cover any pre-existing seen state,
-            # or those URLs would wrongly probe "definitely unseen"
-            delta_src = rr.seen_delta
-            if bloom is None and rnd > 0 and seen is not None:
-                # no committed prior bloom at rnd>0 (resuming a workdir
-                # crawled with use_bloom=False, or whose last bloom was
-                # lost or never committed): rebuild the accumulator
-                # from the FULL seen state, not just this round's delta —
-                # otherwise the next round's probe reports earlier-seen
-                # URLs "definitely unseen" and the never-false-drop
-                # invariant rests on the exact backstop alone
-                delta_src = delta_src.unionByName(seen.select("canonical_url"))
-            elif rnd == 0 and seen_base is not None:
-                delta_src = delta_src.unionByName(seen_base.select("canonical_url"))
-            delta = bloom_filter.build_delta(delta_src)
-            acc = delta if bloom is None else bloom_filter.merge(bloom.unionByName(delta))
-            write_table(acc, os.path.join(rd, "bloom"), mode="overwrite")
-        phases_s = dict(rr.phases_s, bloom=round(time.monotonic() - t_bloom, 3))
         # frees a seed-built frontier; a no-op on a frontier_next read
         frontier.unpersist()
         frontier = spark.read.schema(schemas.FRONTIER).parquet(
@@ -543,7 +492,7 @@ def run_crawl(
         tmp = _manifest_path(workdir, rnd) + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"round": rnd, "rank_offset_next": rank_offset,
-                       "metrics": metrics, "phases_s": phases_s}, f)
+                       "metrics": metrics, "phases_s": rr.phases_s}, f)
         os.replace(tmp, _manifest_path(workdir, rnd))
         for df in rr.persisted:
             df.unpersist()
@@ -565,16 +514,6 @@ def run_crawl(
                     os.path.join(workdir, "pinned_compact", str(rnd)),
                     mode="overwrite",
                 )
-            # bloom re-size at compaction (occupancy check is pure driver
-            # arithmetic: accumulated inserts = rank_offset + initial seen)
-            if use_bloom and full is not None:
-                n_inserted = rank_offset + n_seen_base
-                if bloom_filter.estimated_fpr(n_inserted) > 2 * TARGET_FPR:
-                    bloom_filter = BloomSeen.sized(max(4 * n_inserted, 1024))
-                    _replace_committed(
-                        bloom_filter.build_delta(full.select("canonical_url")),
-                        os.path.join(rd, "bloom"),
-                    )
 
     pages_k.unpersist()
     frontier.unpersist()  # a seed-built frontier that no round consumed

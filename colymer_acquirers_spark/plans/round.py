@@ -185,7 +185,6 @@ def _described(sc, desc: str, fn, *args):
 
 @dataclass
 class RoundResult:
-    seen_delta: DataFrame  # lazy; used for the bloom delta build
     metrics: dict
     persisted: list  # round-local cached DataFrames; unpersist after commit
     phases_s: dict  # driver wall seconds: construct, writes, metrics
@@ -235,7 +234,6 @@ def run_round(
     check_seen: bool,
     default_budget: int = 1_000_000,
     boundary_mode: str = "continue",
-    bloom: DataFrame | None = None,
     bloom_filter: BloomSeen | None = None,
     pinned_prior: DataFrame | None = None,
 ) -> RoundResult:
@@ -248,6 +246,8 @@ def run_round(
     Pass it only for a frontier that can hold seen urls; a frontier_next
     that round K-1 wrote is disjoint from seen as of K-1, so without the
     check candidates = frontier and nothing is deduped or deferred.
+    ``bloom_filter``, used in continue mode, is built from ``seen`` and
+    probed first, so the exact anti-join sees only bloom-positive rows.
 
     A cross-round overlap was measured neutral: OPTIMIZATION_r08.md.
     """
@@ -270,7 +270,8 @@ def run_round(
     elif boundary_mode == "break":
         candidates, boundary_deferred = boundary_break_split(frontier, seen)
         candidates = candidates.persist()
-    elif bloom is not None:
+    elif bloom_filter is not None:
+        bloom = bloom_filter.build_delta(seen)
         probed = bloom_filter.probe(frontier, bloom).persist()
         extra_persisted.append(probed)
         unseen = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
@@ -285,8 +286,9 @@ def run_round(
     # 2. robots gate
     allowed, _ = robots_filter(candidates, robots)
 
-    # 3. politeness budget split (ranked intermediate cached so the
-    # join+window chain runs once, not once per split half)
+    # 3. politeness budget split (the phase-1 frame is cached so the
+    # robots verdict, budget join and salted window run once, not once per
+    # split part)
     fetched, carryover = politeness_split(
         allowed, politeness, default_budget, persisted=extra_persisted
     )
@@ -328,7 +330,7 @@ def run_round(
     # plan-construction time for the LATER outputs overlaps the EARLIER
     # writes' execution instead of serializing ahead of all of them. Safe
     # without phases: every shared intermediate (checked candidates, the
-    # politeness-ranked chain, fetched, the rank intermediate, parsed,
+    # politeness phase-1 frame, fetched, the rank intermediate, parsed,
     # links) is persisted, and Spark's block-level cache locking makes a
     # concurrent consumer block on an in-progress partition instead of
     # recomputing it — each cache partition is computed exactly once no
@@ -510,7 +512,6 @@ def run_round(
     }
     t_end = time.monotonic()
     return RoundResult(
-        seen_delta=seen_delta,
         metrics=metrics,
         persisted=[fetched, parsed, links] + extra_persisted,
         phases_s={

@@ -75,7 +75,7 @@ def test_sized_matches_bloom_arithmetic():
     assert 170 <= big.n_shards <= 190, big.n_shards
     assert big.m_bits <= (1 << 26) * 8
     assert big.k == 7
-    # saturation is visible through the estimate (the autosize trigger)
+    # saturation is visible through the estimate
     assert big.estimated_fpr(10_000_000_000) < 0.011
     assert big.estimated_fpr(40_000_000_000) > 0.1
 
@@ -99,100 +99,3 @@ def test_table_is_self_describing(spark):
     t = bs.build_delta(_urls(spark, 0, 100))
     back = BloomSeen.from_table(t)
     assert back.params() == {"n_shards": 4, "m_bits": 1 << 14, "k": 3}
-
-
-def test_crawl_autosize_resizes_and_stays_exact(spark, tmp_path):
-    """A deliberately tiny bloom must get rebuilt at compaction (estimated
-    FPR over threshold) with results identical to the exact-only run, and
-    a resume after the resize must keep the persisted geometry: its first
-    bloom ``merge`` raises on mismatched filter parameters."""
-    import os
-
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from colymer_acquirers_spark.operators.seen_bloom import BLOOM_SCHEMA
-    from colymer_acquirers_spark.plans.crawl import read_output, run_crawl
-    from colymer_acquirers_spark.sources.synth import (
-        synth_pages,
-        synth_politeness,
-        synth_seeds,
-    )
-
-    pages = synth_pages(spark, 400).persist()
-    seeds = synth_seeds(spark, 6)
-    pol = synth_politeness(spark)
-    tiny = BloomSeen(n_shards=2, m_bits=256, k=3)  # saturates in one round
-
-    wd_a = str(tmp_path / "auto")
-    run_crawl(spark, pages, seeds, pol, None, wd_a, max_rounds=4,
-              use_bloom=True, bloom_filter=tiny, compact_every=2)
-    wd_b = str(tmp_path / "exact")
-    run_crawl(spark, pages, seeds, pol, None, wd_b, max_rounds=4)
-
-    a = read_output(spark, wd_a, "crawl_order").orderBy("rank").collect()
-    b = read_output(spark, wd_b, "crawl_order").orderBy("rank").collect()
-    assert [r["url"] for r in a] == [r["url"] for r in b]
-
-    # the last committed bloom must carry a rebuilt (larger) geometry
-    last = max(
-        int(k) for k in os.listdir(os.path.join(wd_a, "rounds")) if k.isdigit()
-    )
-    persisted = BloomSeen.from_table(
-        spark.read.schema(BLOOM_SCHEMA).parquet(
-            os.path.join(wd_a, "rounds", str(last), "bloom")
-        )
-    )
-    assert persisted.m_bits > tiny.m_bits, persisted.params()
-
-    # resume with NO bloom_filter arg: geometry must come from the table
-    more = run_crawl(spark, pages, seeds, pol, None, wd_a, max_rounds=6,
-                     use_bloom=True, compact_every=2)
-    assert more["rounds"] == list(range(len(more["rounds"])))
-    a6 = read_output(spark, wd_a, "crawl_order").orderBy("rank").collect()
-    run_crawl(spark, pages, seeds, pol, None, wd_b, max_rounds=6)
-    b6 = read_output(spark, wd_b, "crawl_order").orderBy("rank").collect()
-    assert [r["url"] for r in a6] == [r["url"] for r in b6]
-    pages.unpersist()
-
-
-def test_crawl_resumes_over_emptied_bloom_dir(spark, tmp_path):
-    """A committed round whose bloom dir lost its files and commit marker
-    (what an interrupted delete leaves) must resume: the uncommitted dir
-    counts as absent, the next round rebuilds the bloom from the full seen
-    state, and the crawl order equals the exact-only run's."""
-    import os
-
-    from colymer_acquirers_spark.plans.crawl import read_output, run_crawl
-    from colymer_acquirers_spark.sources.synth import (
-        synth_pages,
-        synth_politeness,
-        synth_seeds,
-    )
-
-    pages = synth_pages(spark, 300).persist()
-    seeds = synth_seeds(spark, 6)
-    pol = synth_politeness(spark)
-
-    def crawl(wd, **kw):
-        run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=3, **kw)
-        url = read_output(spark, wd, "crawl_order").orderBy("rank").first()["url"]
-        if kw:
-            bloom_dir = os.path.join(wd, "rounds", "2", "bloom")
-            for name in os.listdir(bloom_dir):
-                os.remove(os.path.join(bloom_dir, name))
-        reseed = spark.createDataFrame([(url, 0)], ["url", "priority"])
-        run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=4,
-                  reseed=reseed, **kw)
-        rows = read_output(spark, wd, "crawl_order").orderBy("rank").collect()
-        return [(r["rank"], r["url"], r["round"]) for r in rows]
-
-    wd_b = str(tmp_path / "bloom")
-    got = crawl(wd_b, use_bloom=True)
-    want = crawl(str(tmp_path / "exact"))
-    assert got == want
-    assert {r for _, _, r in got} == {0, 1, 2, 3}
-    for k in (0, 1, 3):  # round 2's is the emptied one
-        assert os.path.exists(
-            os.path.join(wd_b, "rounds", str(k), "bloom", "_TABLE_COMMIT")
-        ), k
-    pages.unpersist()

@@ -1,12 +1,13 @@
 """Mode-variant equivalence (SURVEY.md §5.4 tests 1, 4, 5):
 
-- bloom-prefiltered crawl ≡ exact crawl, through an evict-and-reseed call
-  whose first round probes the bloom
+- bloom-prefiltered crawl ≡ exact crawl, straight and through an
+  evict-and-reseed call, also with the bloom turned on only at the reseed
 - break-boundary crawl ≡ pyref break mode (P9 variant), differing from
   continue mode on the same pre-seen state
 - kill/resume ≡ straight run
-- step 1 (the seen check) runs only on a seed-built frontier, and every
-  frontier_next is disjoint from seen as of its round
+- step 1 (the seen check) runs only on a seed-built frontier, builds the
+  bloom there and nowhere else, and every frontier_next is disjoint from
+  seen as of its round
 - initial_seen is refused once rounds have committed without it
 """
 
@@ -36,6 +37,12 @@ from colymer_acquirers_spark.sources.synth import (
 
 N_PAGES = 250
 ROUNDS = 3
+ROUND_FILES = sorted(
+    ["crawl_order", "articles", "attachments_new", "lineage", "frontier_next",
+     "manifest.json"]
+)
+# step-1 calls of a round that checks seen with the bloom on
+BLOOM_STEP1 = ("build_delta", "dedup_against_seen", "probe")
 
 
 @pytest.fixture(scope="module")
@@ -80,10 +87,10 @@ def _evict_first(spark, wd):
 
 
 def test_bloom_crawl_identical_to_exact(spark, web, tmp_path_factory, monkeypatch):
-    """A fresh crawl never probes its bloom (round 0 has none, later rounds
-    skip step 1), so each crawl ends with an evict-and-reseed call whose
-    first round must probe it; the evicted url's stale positive goes
-    through the exact backstop."""
+    """Bloom-on crawls over pre-seen state equal the exact one: straight
+    (round 0 builds and probes a bloom) and through an evict-and-reseed
+    call (its first round does), also on a workdir crawled without the
+    bloom that turns it on only for the reseed call."""
     pages, seeds, pol, rob = web
     probes = []
     probe = BloomSeen.probe
@@ -93,23 +100,29 @@ def test_bloom_crawl_identical_to_exact(spark, web, tmp_path_factory, monkeypatc
         return probe(self, *a)
 
     monkeypatch.setattr(BloomSeen, "probe", counted_probe)
-    wd_exact = str(tmp_path_factory.mktemp("exact"))
-    wd_bloom = str(tmp_path_factory.mktemp("bloom"))
-    bloom_kw = dict(use_bloom=True, bloom_filter=BloomSeen(n_shards=8, m_bits=1 << 16))
-    for wd, kw in ((wd_exact, {}), (wd_bloom, bloom_kw)):
-        run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=ROUNDS, **kw)
+    pre = _pre_seen(pages)
+    wds = {name: str(tmp_path_factory.mktemp(name)) for name in ("exact", "bloom", "toggled")}
+    for name, wd in wds.items():
+        run_crawl(
+            spark, pages, seeds, pol, rob, wd, max_rounds=ROUNDS,
+            initial_seen=pre, use_bloom=name == "bloom",
+        )
         target = _evict_first(spark, wd)
         run_crawl(
             spark, pages, seeds, pol, rob, wd, max_rounds=ROUNDS + 1,
-            reseed=target, **kw,
+            reseed=target, use_bloom=name != "exact",
         )
-    assert len(probes) == 1, "the reseed call's first round probes the bloom"
-    a, b = _order(spark, wd_exact), _order(spark, wd_bloom)
+    # round 0 and the reseed round of "bloom"; the reseed round of "toggled"
+    assert len(probes) == 3
+    a, *others = [_order(spark, wd) for wd in wds.values()]
     assert set(a["round"]) == set(range(ROUNDS + 1))
-    pd.testing.assert_frame_equal(a, b)
-    sa = set(read_output(spark, wd_exact, "seen_delta").toPandas()["canonical_url"])
-    sb = set(read_output(spark, wd_bloom, "seen_delta").toPandas()["canonical_url"])
-    assert sa == sb
+    for b in others:
+        pd.testing.assert_frame_equal(a, b)
+    sa, *others = [
+        set(read_output(spark, wd, "seen_delta").toPandas()["canonical_url"])
+        for wd in wds.values()
+    ]
+    assert all(sb == sa for sb in others)
 
 
 def test_break_mode_matches_pyref(spark, web, tmp_path_factory):
@@ -155,36 +168,6 @@ def test_resume_identical(spark, web, tmp_path_factory):
     run_crawl(spark, pages, seeds, pol, rob, wd_resume, max_rounds=1)
     run_crawl(spark, pages, seeds, pol, rob, wd_resume, max_rounds=ROUNDS)
     pd.testing.assert_frame_equal(_order(spark, wd_full), _order(spark, wd_resume))
-
-
-def test_resume_toggling_bloom_on(spark, web, tmp_path_factory):
-    """Resume a bloom-less workdir WITH use_bloom=True: results identical to
-    a straight run, and the rebuilt bloom must cover the pre-resume rounds'
-    URLs (never-false-drop: earlier-seen must not probe 'definitely unseen').
-    """
-    pages, seeds, pol, rob = web
-    wd_full = str(tmp_path_factory.mktemp("bfull"))
-    wd_tog = str(tmp_path_factory.mktemp("btog"))
-    bf = BloomSeen(n_shards=8, m_bits=1 << 16)
-    run_crawl(spark, pages, seeds, pol, rob, wd_full, max_rounds=ROUNDS)
-    run_crawl(spark, pages, seeds, pol, rob, wd_tog, max_rounds=1)  # no bloom
-    run_crawl(
-        spark, pages, seeds, pol, rob, wd_tog, max_rounds=ROUNDS,
-        use_bloom=True, bloom_filter=bf,
-    )
-    pd.testing.assert_frame_equal(_order(spark, wd_full), _order(spark, wd_tog))
-    # the first bloom written after the toggle (round 1) must cover round 0
-    import os
-
-    from colymer_acquirers_spark.operators.seen_bloom import BLOOM_SCHEMA
-
-    bloom = spark.read.schema(BLOOM_SCHEMA).parquet(
-        os.path.join(wd_tog, "rounds", "1", "bloom")
-    )
-    round0 = read_output(spark, wd_tog, "seen_delta", upto=0)
-    probed = bf.probe(round0.withColumnRenamed("canonical_url", "canonical_url"), bloom)
-    n_missed = probed.filter(~F.col("maybe_seen")).count()
-    assert n_missed == 0, "rebuilt bloom must cover pre-resume seen URLs"
 
 
 def test_break_split_plan_has_no_window(spark, web):
@@ -242,7 +225,8 @@ def test_compaction_identical_and_bounded_reads(spark, web, tmp_path_factory):
 
 def _assert_manifests_match(wd, golden):
     """Every committed manifest's metrics equal pyref's round by round, with
-    no negative count anywhere and the driver phase timings beside them."""
+    no negative count anywhere and the driver phase timings beside them,
+    and each round dir holds only the five outputs and the manifest."""
     import json
     import os
 
@@ -257,7 +241,8 @@ def _assert_manifests_match(wd, golden):
         counts = [v for v in em.values() if isinstance(v, int)]
         counts += list(em["fetched_by_partition"].values())
         assert min(counts) >= 0, em
-        assert set(man["phases_s"]) == {"construct", "writes", "metrics", "bloom"}
+        assert set(man["phases_s"]) == {"construct", "writes", "metrics"}
+        assert sorted(os.listdir(os.path.dirname(path))) == ROUND_FILES
 
 
 @pytest.mark.parametrize(
@@ -318,8 +303,8 @@ def test_manifest_metrics_match_pyref_until_frontier_empty(spark, tmp_path_facto
 
 
 def _count_step1(monkeypatch):
-    """Count the step-1 operator calls of every run_round call; returns the
-    list the counts land in, as (round, calls)."""
+    """Record the step-1 operator calls and bloom builds of every run_round
+    call; returns the list they land in, as (round, sorted call names)."""
     from colymer_acquirers_spark.plans import crawl as crawl_mod
     from colymer_acquirers_spark.plans import round as round_mod
 
@@ -334,14 +319,15 @@ def _count_step1(monkeypatch):
 
     for name in ("dedup_against_seen", "boundary_break_split"):
         monkeypatch.setattr(round_mod, name, counted(getattr(round_mod, name)))
-    monkeypatch.setattr(BloomSeen, "probe", counted(BloomSeen.probe))
+    for name in ("probe", "build_delta"):
+        monkeypatch.setattr(BloomSeen, name, counted(getattr(BloomSeen, name)))
     per_round = []
     run_round = crawl_mod.run_round
 
     def counted_round(*a, **k):
         n = len(hits)
         out = run_round(*a, **k)
-        per_round.append((a[5], len(hits) - n))
+        per_round.append((a[5], tuple(sorted(hits[n:]))))
         return out
 
     monkeypatch.setattr(crawl_mod, "run_round", counted_round)
@@ -364,19 +350,20 @@ def test_step1_runs_only_on_seed_built_frontiers(
 ):
     """A straight crawl and the same crawl split after round 1 both run
     step 1 in round 0 only and give identical outputs and seen; a later
-    reseed call runs it in its first round only (bloom probe plus the
-    exact backstop)."""
+    reseed call runs it in its first round only. Each step-1 round builds
+    one bloom, probes it and runs the exact backstop; no other round
+    touches the bloom."""
     pages, seeds, pol, rob = web
     kw = dict(initial_seen=_pre_seen(pages), use_bloom=True)
     calls = _count_step1(monkeypatch)
     wd_a = str(tmp_path_factory.mktemp("straight"))
     wd_b = str(tmp_path_factory.mktemp("split"))
     run_crawl(spark, pages, seeds, pol, rob, wd_a, max_rounds=ROUNDS, **kw)
-    assert calls == [(0, 1), (1, 0), (2, 0)]
+    assert calls == [(0, BLOOM_STEP1), (1, ()), (2, ())]
     calls.clear()
     run_crawl(spark, pages, seeds, pol, rob, wd_b, max_rounds=1, **kw)
     run_crawl(spark, pages, seeds, pol, rob, wd_b, max_rounds=ROUNDS, **kw)
-    assert calls == [(0, 1), (1, 0), (2, 0)]
+    assert calls == [(0, BLOOM_STEP1), (1, ()), (2, ())]
 
     pd.testing.assert_frame_equal(_order(spark, wd_a), _order(spark, wd_b))
     arts = [
@@ -401,7 +388,7 @@ def test_step1_runs_only_on_seed_built_frontiers(
         spark, pages, seeds, pol, rob, wd_b, max_rounds=ROUNDS + 2,
         reseed=target, **kw,
     )
-    assert calls == [(ROUNDS, 2), (ROUNDS + 1, 0)]
+    assert calls == [(ROUNDS, BLOOM_STEP1), (ROUNDS + 1, ())]
 
 
 @pytest.mark.parametrize(
@@ -476,7 +463,7 @@ def test_initial_seen_only_before_the_first_round(
         "rounds"
     ] == []
     run_crawl(spark, pages, seeds, pol, rob, wd_b, max_rounds=ROUNDS, **kw)
-    assert calls == [(0, 1), (1, 0), (2, 0)]
+    assert calls == [(0, BLOOM_STEP1), (1, ()), (2, ())]
     golden = pyref.crawl(
         *pd_args, max_rounds=ROUNDS,
         initial_seen=set(pre.toPandas()["canonical_url"]),

@@ -48,8 +48,8 @@ def test_evict_refetches_exactly_once(spark, tmp_path):
     assert [r["rank"] for r in rows] == list(range(len(rows)))
 
     # replay the whole crawl/evict/reseed sequence with the bloom prefilter
-    # on → identical: the evicted url's stale bloom positive falls through
-    # to the exact backstop
+    # on → identical: each reseed round builds its bloom from seen as it
+    # then is, without the evicted url before the re-fetch and with it after
     rows2, url2 = _run_sequence(
         spark, str(tmp_path / "wd2"), pages, seeds, pol, use_bloom=True
     )
@@ -60,37 +60,37 @@ def test_evict_refetches_exactly_once(spark, tmp_path):
     pages.unpersist()
 
 
-def test_evict_with_bloom_prefilter_matches_exact(spark, tmp_path):
-    """The bloom cannot delete: after evict_seen the persisted shards still
-    probe maybe-seen for the url, the exact backstop lets it through, and
-    the results equal the exact-only eviction run."""
-    import os
-
+def test_evict_with_bloom_prefilter_matches_exact(spark, tmp_path, monkeypatch):
+    """Evict + reseed with the bloom on equals the exact-only eviction run,
+    even with a filter so small that it saturates: the reseed round's bloom
+    is built from seen without the evicted url, and every false positive
+    goes through the exact backstop."""
     from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
-    from colymer_acquirers_spark.sources.tables import read_table
 
+    # 8 bits per shard: the ~45 seen urls set nearly every bit
+    tiny = BloomSeen(n_shards=2, m_bits=8, k=3)
+    sized = []
+
+    def saturated(n):
+        sized.append(n)
+        return tiny
+
+    monkeypatch.setattr(BloomSeen, "sized", saturated)
     pages = synth_pages(spark, 300).persist()
     seeds = synth_seeds(spark, 6)
     pol = synth_politeness(spark)
 
     wd = str(tmp_path / "bloom")
-    kw = dict(use_bloom=True, bloom_filter=BloomSeen(n_shards=4, m_bits=1 << 14))
-    run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=3, **kw)
+    n_seen = run_crawl(
+        spark, pages, seeds, pol, None, wd, max_rounds=3, use_bloom=True
+    )["rank_total"]
+    assert tiny.estimated_fpr(n_seen) > 0.9
     url = read_output(spark, wd, "crawl_order").orderBy("rank").first()["url"]
     target = spark.createDataFrame([(url, 0)], ["url", "priority"])
-
-    bloom = read_table(spark, os.path.join(wd, "rounds", "2", "bloom"),
-                       schema=BloomSeen.SCHEMA)
-    bs = BloomSeen.from_table(bloom)
-    probe_df = spark.createDataFrame([(url,)], ["canonical_url"])
-    assert bs.probe(probe_df, bloom).first()["maybe_seen"] is True
-
     evict_seen(spark, wd, target.select("url"))
-    # a stale positive: the shards are untouched by the eviction
-    assert bs.probe(probe_df, bloom).first()["maybe_seen"] is True
-
     run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=5,
               reseed=target, use_bloom=True)
+    assert len(sized) == 1  # the reseed round built the saturated filter
     rows = read_output(spark, wd, "crawl_order").orderBy("rank").collect()
     fetch_rounds = [r["round"] for r in rows if r["url"] == url]
     assert len(fetch_rounds) == 2 and fetch_rounds[1] == 3, fetch_rounds
@@ -137,14 +137,11 @@ def test_evict_never_fetched_and_double_evict_is_safe(spark, tmp_path):
     re-invoking evict_seen at the same stamp (prior stamp's urls merged
     back into the set), must not un-see anything else — no url other than
     the target may ever be fetched twice."""
-    from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
-
     pages = synth_pages(spark, 300).persist()
     seeds = synth_seeds(spark, 6)
     pol = synth_politeness(spark)
     wd = str(tmp_path / "wd")
-    kw = dict(use_bloom=True, bloom_filter=BloomSeen(n_shards=4, m_bits=1 << 14))
-    run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=3, **kw)
+    run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=3, use_bloom=True)
     url = read_output(spark, wd, "crawl_order").orderBy("rank").first()["url"]
     target = spark.createDataFrame([(url, 0)], ["url", "priority"])
 
