@@ -113,11 +113,12 @@ def global_rank(
     # Offsets = start + exclusive prefix sum of counts in partition-id
     # order. ≤ num_partitions rows, so the unpartitioned window is a
     # single trivial task. `start` changes per round, so it flows in as
-    # DATA (1-row local relation, broadcast cross join) confined to this
-    # tiny subplan — an inline F.lit(start) would land in generated source
-    # and defeat the codegen cache exactly like the round-number literal
-    # did (see plans/round.py __round note).
-    start_df = spark.createDataFrame([(int(start),)], schema="__rank_start long")
+    # DATA (a 1-row JVM Range, broadcast cross join) confined to this tiny
+    # subplan — an inline F.lit(start) would land in generated source and
+    # defeat the codegen cache exactly like the round-number literal did
+    # (see plans/round.py __round note).
+    start_df = spark.range(start, start + 1, 1, 1)
+    start_df = start_df.withColumnRenamed("id", "__rank_start")
     offs = (
         counts_df.crossJoin(F.broadcast(start_df))
         .withColumn("__rank_off", frag["off"])

@@ -91,12 +91,16 @@ class BloomSeen:
         expected_items: int,
         target_fpr: float = TARGET_FPR,
         max_shard_bytes: int = 1 << 26,
+        min_shards: int = 1,
     ) -> "BloomSeen":
         """Derive (n_shards, m_bits, k) from expected item count and target
         FPR (SURVEY.md §4.3 sizing): total_bits = n·ln(1/p)/ln²2,
         k = (m/n)·ln2, shard count bounded by ``max_shard_bytes`` so a
         single shard always fits one task's memory (64 MiB default — the
-        10^10-URL / 1% config lands on ~180 shards of 64 MiB, k=7).
+        10^10-URL / 1% config lands on ~180 shards of 64 MiB, k=7), and
+        at least ``min_shards`` (the crawl passes its shuffle width), so
+        the build and the probe of a small filter still run as that many
+        tasks instead of one.
 
         Shard key splits ITEMS uniformly too (salted full-URL hash), so the
         bits-per-item ratio — and therefore the FPR — is preserved
@@ -104,7 +108,7 @@ class BloomSeen:
         n = max(1, int(expected_items))
         total_bits = math.ceil(n * math.log(1.0 / target_fpr) / (math.log(2) ** 2))
         k = max(1, round(total_bits / n * math.log(2)))
-        n_shards = max(1, math.ceil(total_bits / (max_shard_bytes * 8)))
+        n_shards = max(min_shards, math.ceil(total_bits / (max_shard_bytes * 8)))
         # per-shard bits, rounded up to whole bytes
         m_bits = ((math.ceil(total_bits / n_shards) + 7) // 8) * 8
         return cls(n_shards=n_shards, m_bits=m_bits, k=k)

@@ -23,7 +23,11 @@ from pyspark.sql import functions as F
 
 from colymer_acquirers_spark import schemas
 from colymer_acquirers_spark.functions.canonical import host_of
-from colymer_acquirers_spark.operators.seen import compact_seen, merge_frontier
+# compact_seen runs in run_round; perfbench's traced run wraps it here
+from colymer_acquirers_spark.operators.seen import (  # noqa: F401
+    compact_seen,
+    merge_frontier,
+)
 from colymer_acquirers_spark.operators.seen_bloom import BloomSeen
 from colymer_acquirers_spark.plans.round import (
     FRONTIER_COLS,
@@ -127,24 +131,18 @@ def read_output(spark: SparkSession, workdir: str, name: str, upto: int | None =
     if not paths:
         if schema is None:
             raise ValueError(f"no committed {name} outputs under {workdir}")
-        return spark.createDataFrame([], schema)
+        # a JVM frame, not createDataFrame([]): that scans a Python RDD
+        return spark.range(0).select(
+            *(F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields)
+        )
     df = spark.read.parquet(*paths)
     return df
 
 
-def _committed_compactions(workdir: str) -> list[int]:
-    d = os.path.join(workdir, "seen_compact")
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(name)
-        for name in os.listdir(d)
-        if name.isdigit() and os.path.exists(os.path.join(d, name, "_TABLE_COMMIT"))
-    )
-
-
-def _committed_evictions(workdir: str, upto: int | None = None) -> list[int]:
-    d = os.path.join(workdir, "evictions")
+def _committed_stamps(workdir: str, kind: str, upto: int | None = None) -> list[int]:
+    """Stamps ≤ ``upto`` of the committed ``workdir/kind/<stamp>`` tables
+    (seen_compact, pinned_compact, evictions)."""
+    d = os.path.join(workdir, kind)
     if not os.path.isdir(d):
         return []
     return sorted(
@@ -198,7 +196,7 @@ def read_seen(
     are already baked into that compaction. Tail deltas carry their round
     stamp, so the subtraction condition is exact: as_of ≥ delta round.
     """
-    comps = [c for c in _committed_compactions(workdir) if c <= upto]
+    comps = _committed_stamps(workdir, "seen_compact", upto)
     lo = -1
     base = seen_base
     if comps:
@@ -206,7 +204,7 @@ def read_seen(
         base = read_table(
             spark, os.path.join(workdir, "seen_compact", str(lo)), schema=schemas.SEEN
         )
-    ev_stamps = _committed_evictions(workdir, upto)
+    ev_stamps = _committed_stamps(workdir, "evictions", upto)
     if base is not None:
         base = base.select("canonical_url")
         base_ev = _evictions_df(
@@ -287,19 +285,14 @@ def evict_seen(spark: SparkSession, workdir: str, urls: DataFrame) -> int:
 def read_pinned(spark: SparkSession, workdir: str, upto: int) -> DataFrame | None:
     """P7 pinned-attachment-id state after rounds ≤ upto: latest committed
     compaction + tail deltas (same splice pattern as read_seen)."""
-    d = os.path.join(workdir, "pinned_compact")
-    comps = sorted(
-        int(n)
-        for n in (os.listdir(d) if os.path.isdir(d) else [])
-        if n.isdigit()
-        and os.path.exists(os.path.join(d, n, "_TABLE_COMMIT"))
-        and int(n) <= upto
-    )
+    comps = _committed_stamps(workdir, "pinned_compact", upto)
     base = None
     lo = -1
     if comps:
         lo = comps[-1]
-        base = read_table(spark, os.path.join(d, str(lo))).select("id")
+        base = read_table(
+            spark, os.path.join(workdir, "pinned_compact", str(lo))
+        ).select("id")
     ks = [k for k in committed_rounds(workdir) if lo < k <= upto]
     paths = [
         p
@@ -368,22 +361,26 @@ def run_crawl(
     Each round's ``manifest.json`` holds its exact ``metrics`` (the
     deterministic counts, equal to ``pyref.crawl``'s) and, beside them,
     ``phases_s``: driver wall seconds for plan construction, the pooled
-    writes and the metrics gather. Seen/pinned compaction runs after the
-    manifest commits, so its time is not in any manifest.
+    writes and the metrics gather. A round due for compaction writes the
+    seen/pinned compactions in its write pool, so their time is in that
+    round's ``phases_s["writes"]``.
     """
     done = committed_rounds(workdir)
     # pre-existing seen state (reference analog: chain blocks from a prior
-    # scan, acquirer.py:21-22); persisted once so resume sees the same state
+    # scan, acquirer.py:21-22); persisted once, as a committed table, so
+    # resume sees the same state and a crashed write counts as absent
     seen_base_path = os.path.join(workdir, "initial_seen")
-    if initial_seen is not None and not os.path.exists(seen_base_path):
+    has_seen_base = os.path.exists(os.path.join(seen_base_path, "_TABLE_COMMIT"))
+    if initial_seen is not None and not has_seen_base:
         if done:
             raise ValueError(
                 f"initial_seen given to {workdir!r}, which has committed "
                 "rounds crawled without it; start a new workdir"
             )
-        initial_seen.select("canonical_url").write.mode("overwrite").parquet(
-            seen_base_path
+        write_table(
+            initial_seen.select("canonical_url"), seen_base_path, mode="overwrite"
         )
+        has_seen_base = True
     # overlap the one-time parse/envelope tree construction + first-query
     # codegen with round 0's early stages (see _warm_parse_exprs)
     import threading
@@ -391,11 +388,9 @@ def run_crawl(
     threading.Thread(
         target=_warm_parse_exprs, args=(spark,), daemon=True
     ).start()
-    seen_base = (
-        spark.read.schema(schemas.SEEN).parquet(seen_base_path)
-        if os.path.exists(seen_base_path)
-        else None
-    )
+    seen_base = None
+    if has_seen_base:
+        seen_base = read_table(spark, seen_base_path, schema=schemas.SEEN)
     # canonicalize once, reuse across rounds (at warehouse scale the pages
     # table stores canonical_url as a bucketed column instead — see README).
     # A parse-once page store was measured slower: OPTIMIZATION_r08.md.
@@ -451,17 +446,26 @@ def run_crawl(
         )
         pinned_prior = read_pinned(spark, workdir, rnd - 1) if rnd > 0 else None
         rd = _round_dir(workdir, rnd)
-        # clean any uncommitted leftovers from a crashed attempt
-        if os.path.isdir(rd) and not os.path.exists(_manifest_path(workdir, rnd)):
-            shutil.rmtree(rd)
-        os.makedirs(rd, exist_ok=True)
+        # seen/pinned compaction every K committed rounds (reference
+        # analog: block splicing, acquirer.py:46-58), written in the
+        # round's pool, so per-round seen reads stay O(compact_every)
+        state_dirs = tuple(os.path.join(workdir, d, str(rnd))
+                           for d in ("seen_compact", "pinned_compact"))
+        due = compact_every and (rnd + 1) % compact_every == 0
+        # clean what a crashed attempt at this uncommitted round left: its
+        # outputs and its compactions, which would otherwise stand for this
+        # round's state once it commits without compacting
+        for d in (rd, *state_dirs):
+            shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(rd)
         step1 = check_seen and seen is not None
         bloom_filter = None
         if step1 and use_bloom and boundary_mode == "continue":
             # an upper bound on |seen|: every fetch so far plus the
             # initial seen rows
             n_seen = rank_offset + (seen_base.count() if seen_base is not None else 0)
-            bloom_filter = BloomSeen.sized(max(n_seen, 1024))
+            width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            bloom_filter = BloomSeen.sized(max(n_seen, 1024), min_shards=width)
         rr = run_round(
             frontier,
             seen,
@@ -477,6 +481,7 @@ def run_crawl(
             n_frontier=frontier_count,
             check_seen=step1,
             pinned_prior=pinned_prior,
+            compact_to=state_dirs if due else None,
         )
         check_seen = False
         # frees a seed-built frontier; a no-op on a frontier_next read
@@ -496,24 +501,6 @@ def run_crawl(
         os.replace(tmp, _manifest_path(workdir, rnd))
         for df in rr.persisted:
             df.unpersist()
-        # seen compaction every K committed rounds (reference analog: block
-        # splicing, acquirer.py:46-58): rewrite base ∪ deltas into one
-        # table so per-round seen reads stay O(compact_every), not O(R)
-        if compact_every and (rnd + 1) % compact_every == 0:
-            full = read_seen(spark, workdir, rnd, seen_base)
-            if full is not None:
-                write_table(
-                    compact_seen(full),
-                    os.path.join(workdir, "seen_compact", str(rnd)),
-                    mode="overwrite",
-                )
-            pinned_full = read_pinned(spark, workdir, rnd)
-            if pinned_full is not None:
-                write_table(
-                    pinned_full.dropDuplicates(["id"]),
-                    os.path.join(workdir, "pinned_compact", str(rnd)),
-                    mode="overwrite",
-                )
 
     pages_k.unpersist()
     frontier.unpersist()  # a seed-built frontier that no round consumed

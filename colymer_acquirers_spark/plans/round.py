@@ -19,7 +19,8 @@ Two shuffles dominate: step 8's anti-join on canonical_url and the window
 on host (the fetch-join reuses the canonical_url clustering under AQE).
 
 Driver-job economy: a round runs a fixed, small number of actions — one
-write per output plus the tiny rank-counts collect, ALL submitted to one
+write per output, the tiny rank-counts collect and, in a round due for
+compaction, the seen and pinned compaction writes, ALL submitted to one
 thread pool so their planning/commit driver gaps overlap (the serial
 driver-only share, measured at ~8-9 s/crawl before pooling, is
 core-count-independent: the Amdahl term behind the N→4N wall-efficiency
@@ -39,7 +40,8 @@ the caller already has.
 Parse and canonicalization run as JVM column expressions only
 (``parse_expr``, ``envelope_expr``, ``canonical``); html never crosses to
 Python. The pandas functions they mirror are the oracle, not an engine
-path.
+path. No frame of a round is built from a Python list, so a round that
+builds no bloom starts no Python worker.
 """
 
 from __future__ import annotations
@@ -65,6 +67,7 @@ from colymer_acquirers_spark.operators.ranking import global_rank
 from colymer_acquirers_spark.operators.seen import (
     _merge_fragments,
     boundary_break_split,
+    compact_seen,
     dedup_against_seen,
     merge_frontier,
 )
@@ -236,6 +239,7 @@ def run_round(
     boundary_mode: str = "continue",
     bloom_filter: BloomSeen | None = None,
     pinned_prior: DataFrame | None = None,
+    compact_to: tuple[str, str] | None = None,
 ) -> RoundResult:
     """Execute FROZEN SPEC steps 1-9 for round ``rnd`` and write the round's
     outputs (crawl_order, articles, lineage, frontier_next) under out_dir.
@@ -248,6 +252,11 @@ def run_round(
     check candidates = frontier and nothing is deduped or deferred.
     ``bloom_filter``, used in continue mode, is built from ``seen`` and
     probed first, so the exact anti-join sees only bloom-positive rows.
+
+    ``compact_to`` = (seen path, pinned path) also writes, in the same
+    pool, the seen compaction ``seen ∪ fetched`` and the pinned one
+    ``pinned_prior ∪ this round's attachment ids``: the sets ``read_seen``
+    and ``read_pinned`` give for this round once it commits.
 
     A cross-round overlap was measured neutral: OPTIMIZATION_r08.md.
     """
@@ -302,9 +311,11 @@ def run_round(
     # flowing through a BoundReference the source is round-invariant and
     # the codegen cache (sized in session.py) makes rounds 1..R compile
     # nothing new — JIT cost becomes O(1) in the number of rounds, on a
-    # real cluster as on this box.
-    round_df = frontier.sparkSession.createDataFrame(
-        [(rnd,)], schema="__round int"
+    # real cluster as on this box. The row is a JVM Range: a
+    # createDataFrame([...]) frame scans a Python RDD, and its broadcast
+    # runs a Python worker per task.
+    round_df = frontier.sparkSession.range(rnd, rnd + 1, 1, 1).select(
+        F.col("id").cast("int").alias("__round")
     )
     fetched = fetched.crossJoin(F.broadcast(round_df)).persist()
 
@@ -335,7 +346,7 @@ def run_round(
     # concurrent consumer block on an in-progress partition instead of
     # recomputing it — each cache partition is computed exactly once no
     # matter which write job gets there first.
-    pool = ThreadPoolExecutor(max_workers=8)
+    pool = ThreadPoolExecutor(max_workers=10)
     sc = frontier.sparkSession.sparkContext
 
     def _submit(desc, fn, *args):
@@ -344,11 +355,11 @@ def run_round(
         # write tags)
         return pool.submit(_described, sc, f"round{rnd}:{desc}", fn, *args)
 
-    def _write(name, df, after=None):
+    def _write(name, df, after=None, path=None):
         def run():
             if after is not None:
                 after.result()
-            write_table(df, os.path.join(out_dir, name), mode="overwrite")
+            write_table(df, path or os.path.join(out_dir, name), mode="overwrite")
 
         return _submit(f"write:{name}", run)
 
@@ -412,9 +423,9 @@ def run_round(
         parsed.persist()
         links.persist()
 
-    # submitted BEFORE any write that waits on it: the pool is FIFO with 8
-    # workers and at most two earlier tasks (crawl_order, rank), so this
-    # task always gets a worker ahead of anything that blocks on it
+    # submitted BEFORE any write that waits on it: the pool is FIFO with a
+    # worker for each of its (at most 10) tasks, so this task always gets
+    # a worker ahead of anything that blocks on it
     parse_cached = _submit("cache:parse", _register_parse_caches)
 
     # 8. expand: per dst, tuple-min over parents; exclude seen ∪ this round
@@ -454,11 +465,8 @@ def run_round(
     # its absolute url; all other columns are functions of the url) enters
     # attachments_new exactly once across the whole crawl (reference:
     # pin_ids map, twitter.py:13,135-139 → persisted round-to-round state)
-    atts_new = (
-        articles.select(*C["atts_explode"])
-        .select(*C["atts_sel"])
-        .dropDuplicates(["id"])
-    )
+    round_atts = articles.select(*C["atts_explode"]).select(*C["atts_sel"])
+    atts_new = round_atts.dropDuplicates(["id"])
     if pinned_prior is not None:
         atts_new = atts_new.join(
             pinned_prior.select("id"), on="id", how="left_anti"
@@ -474,6 +482,18 @@ def run_round(
         ["src_url", "dst_url"]
     )
     fs.append(_write("lineage", lineage, parse_cached))
+    if compact_to is not None:
+        # state compaction (reference analog: block splicing,
+        # acquirer.py:46-58) beside the outputs, on cores their small
+        # stages leave idle. This round's attachment ids ∪ pinned_prior
+        # is pinned_prior ∪ atts_new without atts_new's anti-join.
+        seen_path, pinned_path = compact_to
+        fs.append(_write("seen_compact", compact_seen(seen_now), path=seen_path))
+        pinned = round_atts.select("id")
+        if pinned_prior is not None:
+            pinned = pinned_prior.select("id").unionByName(pinned)
+        pinned = pinned.dropDuplicates(["id"])
+        fs.append(_write("pinned_compact", pinned, parse_cached, pinned_path))
 
     # the one count job, only in a round that ran step 1 (otherwise
     # candidates is the frontier, counted already): a scan of the

@@ -79,6 +79,16 @@ def test_sized_matches_bloom_arithmetic():
     assert big.estimated_fpr(10_000_000_000) < 0.011
     assert big.estimated_fpr(40_000_000_000) > 0.1
 
+    # floored at a shuffle width: a small filter keeps its bits and k but
+    # spreads them over min_shards shards; a large one is above the floor
+    one = BloomSeen.sized(20_000, target_fpr=0.01)
+    floored = BloomSeen.sized(20_000, target_fpr=0.01, min_shards=8)
+    assert one.n_shards == 1 and floored.n_shards == 8
+    assert floored.k == one.k == 7
+    assert one.m_bits <= floored.n_shards * floored.m_bits <= one.m_bits + 8 * 8
+    assert floored.estimated_fpr(20_000) < 0.011
+    assert BloomSeen.sized(10_000_000_000, min_shards=8).params() == big.params()
+
 
 def test_sized_measured_fpr_on_fixture(spark):
     """Measured FPR of a .sized() filter tracks the target on real probes

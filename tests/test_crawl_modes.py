@@ -34,6 +34,7 @@ from colymer_acquirers_spark.sources.synth import (
     synth_robots,
     synth_seeds,
 )
+from colymer_acquirers_spark.sources.tables import read_table
 
 N_PAGES = 250
 ROUNDS = 3
@@ -192,7 +193,8 @@ def test_compaction_identical_and_bounded_reads(spark, web, tmp_path_factory):
     import os
 
     from colymer_acquirers_spark.plans.crawl import (
-        _committed_compactions,
+        _committed_stamps,
+        read_pinned,
         read_seen,
     )
 
@@ -204,7 +206,7 @@ def test_compaction_identical_and_bounded_reads(spark, web, tmp_path_factory):
     run_crawl(spark, pages, seeds, pol, rob, wd_comp, max_rounds=ROUNDS,
               compact_every=1)
     pd.testing.assert_frame_equal(_order(spark, wd_none), _order(spark, wd_comp))
-    comps = _committed_compactions(wd_comp)
+    comps = _committed_stamps(wd_comp, "seen_compact")
     assert comps == list(range(ROUNDS)), comps
     # seen state via compaction equals the naive all-deltas union
     via_comp = set(
@@ -214,6 +216,19 @@ def test_compaction_identical_and_bounded_reads(spark, web, tmp_path_factory):
         read_output(spark, wd_none, "seen_delta").toPandas()["canonical_url"]
     )
     assert via_comp == naive
+    # each round's compactions hold the seen urls and the pinned
+    # attachment ids of every round up to it
+    for k in comps:
+        seen_k = read_table(spark, os.path.join(wd_comp, "seen_compact", str(k)))
+        pinned_k = read_table(spark, os.path.join(wd_comp, "pinned_compact", str(k)))
+        deltas = read_output(spark, wd_comp, "seen_delta", upto=k)
+        atts = read_output(spark, wd_comp, "attachments_new", upto=k)
+        assert _ids(seen_k, "canonical_url") == _ids(deltas, "canonical_url")
+        assert _ids(pinned_k, "id") == _ids(atts, "id")
+    # the pinned state read through the compaction is the union of every
+    # round's attachments_new
+    pinned = _ids(read_pinned(spark, wd_comp, ROUNDS - 1), "id")
+    assert pinned and pinned == _ids(read_output(spark, wd_comp, "attachments_new"), "id")
     # and resume on a compacted workdir stays identical
     wd_res = str(tmp_path_factory.mktemp("cres"))
     run_crawl(spark, pages, seeds, pol, rob, wd_res, max_rounds=1,
@@ -221,6 +236,13 @@ def test_compaction_identical_and_bounded_reads(spark, web, tmp_path_factory):
     run_crawl(spark, pages, seeds, pol, rob, wd_res, max_rounds=ROUNDS,
               compact_every=1)
     pd.testing.assert_frame_equal(_order(spark, wd_none), _order(spark, wd_res))
+
+
+def _ids(df, col):
+    """A frame's column as a set, asserting it holds no duplicate."""
+    vals = df.toPandas()[col].tolist()
+    assert len(vals) == len(set(vals)), col
+    return set(vals)
 
 
 def _assert_manifests_match(wd, golden):
@@ -519,3 +541,54 @@ def test_pooled_tasks_set_and_clear_their_job_description(
         pool.submit(_described, sc, "round0:write:crawl_order", lambda: None).result()
         left = pool.submit(sc.getLocalProperty, "spark.job.description").result()
     assert left is None
+
+
+def test_initial_seen_write_crash_is_rewritten(spark, web, tmp_path_factory):
+    """An initial_seen dir that a crashed write left holding only Spark's
+    _temporary/ is not a committed table: the next call writes it again,
+    so no pre-seen url is fetched."""
+    pages, seeds, pol, rob = web
+    pre = _pre_seen(pages)
+    wd = str(tmp_path_factory.mktemp("seen_crash"))
+    os.makedirs(os.path.join(wd, "initial_seen", "_temporary", "0"))
+    run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=ROUNDS, initial_seen=pre)
+    fetched = set(_order(spark, wd)["url"])
+    assert fetched and not fetched & set(pre.toPandas()["canonical_url"])
+
+
+def test_round_plans_scan_no_python_rdd(spark, web, tmp_path_factory, monkeypatch):
+    """No frame a crawl round writes, and not global_rank's output, scans
+    an RDD built in Python (one-row constants are JVM Ranges), and the
+    compactions are written from the round's write pool."""
+    import threading
+
+    from colymer_acquirers_spark.plans import round as round_mod
+
+    plans, compactions = {}, []
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    write_table, global_rank = round_mod.write_table, round_mod.global_rank
+
+    def recording_write(df, identifier, **kw):
+        plans[identifier] = analyzed(df)
+        if "_compact" in identifier:
+            compactions.append(threading.current_thread().name)
+        return write_table(df, identifier, **kw)
+
+    def recording_rank(*a, **kw):
+        ranked, info = global_rank(*a, **kw)
+        plans[f"global_rank:{len(plans)}"] = analyzed(ranked)
+        return ranked, info
+
+    monkeypatch.setattr(round_mod, "write_table", recording_write)
+    monkeypatch.setattr(round_mod, "global_rank", recording_rank)
+    pages, seeds, pol, rob = web
+    wd = str(tmp_path_factory.mktemp("jvm_plans"))
+    run_crawl(spark, pages, seeds, pol, rob, wd, max_rounds=2, compact_every=1)
+    # 2 rounds × (5 outputs + 2 compactions) + 2 global_rank outputs
+    assert len(plans) == 16, sorted(plans)
+    for name, plan in plans.items():
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, name
+    assert len(compactions) == 4 and "MainThread" not in compactions

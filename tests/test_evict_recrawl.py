@@ -71,7 +71,7 @@ def test_evict_with_bloom_prefilter_matches_exact(spark, tmp_path, monkeypatch):
     tiny = BloomSeen(n_shards=2, m_bits=8, k=3)
     sized = []
 
-    def saturated(n):
+    def saturated(n, **kw):
         sized.append(n)
         return tiny
 
@@ -244,3 +244,63 @@ def test_flagship_recrawl_flow_crash_safety(spark):
 
     out2 = [tuple(r) for r in q(spark, sf).collect()]
     assert out1 == out2
+
+
+def test_rerun_round_drops_its_crashed_compaction(spark, tmp_path, monkeypatch):
+    """Round 2 stopped after its pooled compaction and before its manifest
+    leaves seen_compact/2, holding seen as it was before the round-0
+    fetches are evicted afterwards. The re-run of round 2 compacts nothing
+    and must drop it: otherwise it stands for seen after round 2, and an
+    evicted url first linked again in round 3 or later stays "seen". The
+    reseeded url is fetched again exactly once, and crawl_order and seen
+    equal those of a run that never crashed."""
+    import os
+
+    from colymer_acquirers_spark import schemas
+    from colymer_acquirers_spark.plans.crawl import committed_rounds, read_seen
+
+    pages = synth_pages(spark, 300)
+    seeds = synth_seeds(spark, 6)
+    pol = synth_politeness(spark)
+    replace = os.replace
+
+    def no_manifest(src, dst):
+        if dst.endswith("manifest.json"):
+            raise OSError("stopped before the manifest")
+        return replace(src, dst)
+
+    def crawl(wd, crash):
+        run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=2, compact_every=1)
+        if crash:
+            with monkeypatch.context() as m:
+                m.setattr(os, "replace", no_manifest)
+                try:
+                    run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=3,
+                              compact_every=1)
+                except OSError:
+                    pass
+            # the crashed call never reached its unpersists
+            spark.catalog.clearCache()
+            assert committed_rounds(wd) == [0, 1]
+            assert os.path.exists(os.path.join(wd, "seen_compact", "2", "_TABLE_COMMIT"))
+        round0 = read_output(spark, wd, "crawl_order", upto=0).orderBy("rank")
+        evict_seen(spark, wd, round0.select("url"))
+        url = round0.first()["url"]
+        target = spark.createDataFrame([(url, 0)], ["url", "priority"])
+        run_crawl(spark, pages, seeds, pol, None, wd, max_rounds=6,
+                  reseed=target, compact_every=0)
+        rows = read_output(spark, wd, "crawl_order").orderBy("rank").collect()
+        for k in committed_rounds(wd):
+            nxt = spark.read.schema(schemas.FRONTIER).parquet(
+                os.path.join(wd, "rounds", str(k), "frontier_next"))
+            hits = nxt.join(read_seen(spark, wd, k), "canonical_url", "left_semi")
+            assert hits.count() == 0, k
+        seen = {r[0] for r in read_seen(spark, wd, 5).collect()}
+        return [(r["rank"], r["url"], r["round"]) for r in rows], url, seen
+
+    rows, url, seen = crawl(str(tmp_path / "crashed"), crash=True)
+    fetch_rounds = [r for _, u, r in rows if u == url]
+    assert fetch_rounds == [0, 2], fetch_rounds
+    rows_s, url_s, seen_s = crawl(str(tmp_path / "straight"), crash=False)
+    assert url_s == url and rows == rows_s
+    assert seen == seen_s
